@@ -1,8 +1,9 @@
 """Seeded input generator for the benchmark (numpy + pyarrow, no Spark).
 
 One ``numpy.random.Generator`` seeded from ``--seed`` draws, in a fixed
-order, the corpus, the delete set and the query sets, so the same
-(seed, sizes) always gives the same bytes. The corpus follows
+order, the base corpus, the ingest wave (doc ids right after the base
+corpus, so disjoint from it), the delete set and the queries, so the
+same (seed, sizes) always gives the same bytes. The corpus follows
 FIXTURES.md §1: a bounded Zipf(s=1.07) vocabulary whose head is
 stopwords, mixed-case variants (``Term3`` / ``TERM3`` are distinct
 terms), a CRLF subset and a trailing-whitespace subset. The token ids
@@ -27,7 +28,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-GEN_VERSION = 1
+GEN_VERSION = 2
 VOCAB_SIZE = 10_000
 STOPHEAD = ["the", "a", "of", "and", "to", "in", "is", "it"]
 ZIPF_S = 1.07
@@ -35,13 +36,13 @@ LANGS = ["en", "de", "es", "fr", "zh"]
 MIN_TOKENS, MAX_TOKENS = 30, 400
 
 
-#: query specs drawn per shape (batches: one per eight)
-QUERIES_PER_SHAPE = 64
-
-
 @dataclass(frozen=True)
 class Sizes:
     base_docs: int
+    #: docs of the ingest wave, written as ``wave_files`` parquet files
+    wave_docs: int = 0
+    wave_files: int = 1
+    #: share of the base docs in the delete set
     delete_frac: float = 0.0
 
 
@@ -62,8 +63,9 @@ class Docs:
 class Inputs:
     sizes: Sizes
     base: Docs
-    deletes: np.ndarray  # sorted int64 doc ids
-    queries: dict[str, list]  # shape → list of query specs (JSON-able)
+    wave: Docs  # doc ids base_docs .. base_docs + wave_docs - 1
+    deletes: np.ndarray  # sorted int64 doc ids, all in the base corpus
+    queries: dict[str, object]  # shape → its query spec (JSON-able)
 
 
 def vocab() -> list[str]:
@@ -112,15 +114,18 @@ SHAPES = ("or", "and", "glob", "phrase", "near", "composed")
 BATCH = 32
 
 
-def _queries(rng: np.random.Generator, n: int, words: list[str],
-             p: np.ndarray) -> dict[str, list]:
-    """Query specs per shape. Terms are Zipf-drawn from the corpus
-    distribution, so head stopwords and tail terms both occur; globs are
-    ``term1*`` and two-digit ``term`` prefixes (~1.1k and ~110 terms);
-    phrases are stopword pairs; NEAR pairs come from the 64 most frequent
-    terms; composed queries pair a broad glob with a negated non-stopword
-    and a stopword phrase. ``batch`` holds batches of :data:`BATCH`
-    disjunctive queries of one to three terms."""
+def _queries(rng: np.random.Generator, words: list[str],
+             p: np.ndarray) -> dict[str, object]:
+    """One query spec per shape, plus the set-up (``warm``) specs. Terms
+    are Zipf-drawn from the corpus distribution, so head stopwords and
+    tail terms both occur; the glob is a random two-digit ``term``
+    prefix (~110 terms) and the composed query's glob the broad
+    ``term1*`` (~1.1k terms, the most frequent one-digit prefix), so the
+    glob breadth does not depend on the seed; phrases are stopword
+    pairs; the NEAR pair comes from the 64 most frequent terms; the
+    composed query pairs the glob with a negated non-stopword and a
+    stopword phrase. ``batch`` holds :data:`BATCH` disjunctive queries
+    of one to three terms."""
     head = np.array(STOPHEAD)
     hp = zipf_weights(len(head))
     np_ = p[len(STOPHEAD):] / p[len(STOPHEAD):].sum()
@@ -139,21 +144,18 @@ def _queries(rng: np.random.Generator, n: int, words: list[str],
         a, b = rng.choice(len(head), size=2, replace=False, p=hp)
         return [str(head[a]), str(head[b])]
 
-    qs: dict[str, list] = {s: [] for s in SHAPES}
-    for i in range(n):
-        qs["or"].append(terms(int(rng.integers(1, 4))))
-        qs["and"].append(terms(2))
-        # every index pairs the broad ``term1*`` (~1.1k terms, the most
-        # frequent one-digit prefix) with a two-digit prefix (~110 terms)
-        # between glob and composed, so the glob breadth in a cycle does
-        # not depend on the seed
-        qs["glob"].append(prefix(1 + i % 2) + "*")
-        qs["phrase"].append(stop_pair())
-        a, b = (words[i] for i in rng.choice(64, size=2, replace=False,
-                                            p=zipf_weights(64)))
-        qs["near"].append([a, b, int(rng.integers(2, 5))])
-        neg = words[len(STOPHEAD) + int(rng.choice(len(np_), p=np_))]
-        qs["composed"].append([prefix(2 - i % 2) + "*", neg, *stop_pair()])
+    a, b = (words[i] for i in rng.choice(64, size=2, replace=False,
+                                        p=zipf_weights(64)))
+    neg = words[len(STOPHEAD) + int(rng.choice(len(np_), p=np_))]
+    qs: dict[str, object] = {
+        "or": terms(int(rng.integers(1, 4))),
+        "and": terms(2),
+        "glob": prefix(2) + "*",
+        "phrase": stop_pair(),
+        "near": [a, b, int(rng.integers(2, 5))],
+        "composed": [prefix(1) + "*", neg, *stop_pair()],
+        "batch": [terms(int(rng.integers(1, 4))) for _ in range(BATCH)],
+    }
     # first call of each query path (set-up): its narrowest form — a
     # mid-frequency term, a three-digit glob prefix — so set-up pays the
     # path's first-run cost without repeating a broad query's work
@@ -161,11 +163,8 @@ def _queries(rng: np.random.Generator, n: int, words: list[str],
     qs["warm"] = {
         "or": [mid()], "phrase": stop_pair(),
         "composed": [prefix(3) + "*", mid(), *stop_pair()],
+        "batch": [terms(int(rng.integers(1, 4))) for _ in range(BATCH)],
     }
-    qs["batch"] = [
-        [terms(int(rng.integers(1, 4))) for _ in range(BATCH)]
-        for _ in range(max(1, n // 8))
-    ]
     return qs
 
 
@@ -181,11 +180,12 @@ def generate(seed: int, sizes: Sizes) -> Inputs:
     warr = pa.array(words)
     p = zipf_weights(len(words))
     base = _docs(rng, 0, sizes.base_docs, p, warr)
+    wave = _docs(rng, sizes.base_docs, sizes.wave_docs, p, warr)
     n_del = int(round(sizes.base_docs * sizes.delete_frac))
     deletes = np.sort(rng.choice(sizes.base_docs, size=n_del, replace=False)
                       ).astype(np.int64)
-    queries = _queries(rng, QUERIES_PER_SHAPE, words, p)
-    return Inputs(sizes, base, deletes, queries)
+    queries = _queries(rng, words, p)
+    return Inputs(sizes, base, wave, deletes, queries)
 
 
 def doc_table(d: Docs) -> pa.Table:
@@ -210,11 +210,18 @@ def cache_key(seed: int, sizes: Sizes) -> str:
 @dataclass
 class Paths:
     root: str
-    corpus: str  # directory holding documents.parquet (build_index sf_dir)
 
     @property
-    def corpus_file(self) -> str:
-        return os.path.join(self.corpus, "documents.parquet")
+    def corpus(self) -> str:
+        """Directory holding the base corpus' documents.parquet (the
+        ``sf_dir`` of ``build_index``)."""
+        return os.path.join(self.root, "corpus")
+
+    @property
+    def wave(self) -> str:
+        """The ingest wave: a directory of parquet files (the input dir
+        of ``ingest_available``)."""
+        return os.path.join(self.root, "wave")
 
 
 def materialize(seed: int, sizes: Sizes, cache_root: str
@@ -224,13 +231,20 @@ def materialize(seed: int, sizes: Sizes, cache_root: str
     memory either way (cheap, and the seed fixes them)."""
     inputs = generate(seed, sizes)
     root = os.path.join(cache_root, cache_key(seed, sizes))
-    out = Paths(root, os.path.join(root, "corpus"))
+    out = Paths(root)
     done = os.path.join(root, "_COMPLETE")
     if os.path.exists(done):
         return inputs, out
     shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(out.corpus)
-    pq.write_table(doc_table(inputs.base), out.corpus_file)
+    for d in (out.corpus, out.wave):
+        os.makedirs(d)
+    pq.write_table(doc_table(inputs.base),
+                   os.path.join(out.corpus, "documents.parquet"))
+    wave = doc_table(inputs.wave)
+    bounds = np.linspace(0, len(wave), sizes.wave_files + 1).astype(int)
+    for i in range(sizes.wave_files):
+        pq.write_table(wave.slice(bounds[i], bounds[i + 1] - bounds[i]),
+                       os.path.join(out.wave, f"part-{i}.parquet"))
     with open(os.path.join(root, "queries.json"), "w") as f:
         json.dump(inputs.queries, f, sort_keys=True)
     np.save(os.path.join(root, "deletes.npy"), inputs.deletes)

@@ -83,6 +83,11 @@ PER_LAYER = {
     "query.p50_s": "s",
     "query.batch_qps": "1/s",
     **{f"query.p50_s.{s}": "s" for s in QUERY_SHAPES},
+    "ingest.wave_s": "s",
+    "ingest.docs_per_s": "docs/s",
+    "ingest.jobs": "count",
+    "ingest.executor_cpu_s": "s",
+    "ingest.output_bytes": "bytes",
     "deletes.tombstone_s": "s",
     "deletes.purge_s": "s",
     "deletes.purge_jobs": "count",
@@ -100,7 +105,7 @@ PER_LAYER = {
     "storage.index_bytes.term_stats": "bytes",
     "storage.index_bytes.docmap": "bytes",
     "storage.index_bytes.other": "bytes",
-    "trace.overhead_share": "ratio",
+    "trace.harvest_share": "ratio",
     "trace.harvest_s": "s",
     "trace.spans": "count",
 }
@@ -110,6 +115,8 @@ def _parse(argv: list[str]) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
+    # accepted for the calling convention; each workload measures a
+    # fixed amount of work (see workloads.py)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     return ap.parse_args(argv)
@@ -246,7 +253,7 @@ def main(argv: list[str]) -> int:
     os.makedirs(run_dir)
     os.environ.update(_environment(run_dir))
 
-    model = Model([inputs.base], gen.vocab())
+    model = Model([inputs.base, inputs.wave], gen.vocab())
     spark, clean = None, False
     try:
         t0 = time.perf_counter()
@@ -256,7 +263,7 @@ def main(argv: list[str]) -> int:
             ops=Ops(spark, bool(args.trace), f"{args.workload}-{args.seed}"),
             inputs=inputs, paths=paths, work=run_dir, model=model,
             session_s=time.perf_counter() - t0)
-        workloads.WORKLOADS[args.workload](run, args.seconds)
+        workloads.WORKLOADS[args.workload](run)
         peak = measure.peak_rss_mb(os.getpid())
         report = _report(run, args, peak)
         clean = True
@@ -275,6 +282,8 @@ def _report(run: workloads.Run, args: argparse.Namespace,
             peak: float) -> dict:
     g = run.groups
     input_bytes = measure.dir_bytes(run.paths.corpus)
+    if "ingest" in g:  # the index holds the wave's docs too
+        input_bytes += measure.dir_bytes(run.paths.wave)
     index_bytes = measure.dir_bytes(run.index)
     setup = run.session_s + g["pipeline"][0].wall_s
     if args.workload == "point_queries":
@@ -383,6 +392,13 @@ def _layers(run: workloads.Run, args: argparse.Namespace, index_bytes: int,
         out[f"query.p50_s.{shape}"] = median(
             [o.wall_s for o in measured if o.name == shape])
 
+    for op in g.get("ingest", []):
+        c = op.counters()
+        out["ingest.wave_s"] = op.wall_s
+        out["ingest.docs_per_s"] = len(run.inputs.wave) / op.wall_s
+        out["ingest.jobs"] = c["jobs"]
+        out["ingest.executor_cpu_s"] = c["executor_cpu_s"]
+        out["ingest.output_bytes"] = c["output_bytes"]
     out["deletes.tombstone_s"] = g["deletes"][0].wall_s
     for op in g.get("purge", []):
         c = op.counters()
@@ -405,8 +421,10 @@ def _layers(run: workloads.Run, args: argparse.Namespace, index_bytes: int,
         out[f"storage.index_bytes.{n}"] for n in sub)
 
     ops = run.ops.ops
+    # harvest time as a share of the timed calls of this (traced) run;
+    # the cost against an untraced run is a comparison across runs
     out["trace.harvest_s"] = sum(o.harvest_s for o in ops)
-    out["trace.overhead_share"] = (
+    out["trace.harvest_share"] = (
         out["trace.harvest_s"] / sum(o.wall_s for o in ops))
     if args.trace:
         out["trace.spans"] = float(len(run.ops.spans()))

@@ -19,7 +19,8 @@ from model import Model, check_docs, check_ranked
 
 ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
-SMALL = gen.Sizes(base_docs=300, delete_frac=0.02)
+SMALL = gen.Sizes(base_docs=300, wave_docs=50, wave_files=3,
+                  delete_frac=0.02)
 
 
 def _tree_bytes(root: str) -> dict[str, bytes]:
@@ -38,6 +39,8 @@ def test_same_seed_same_bytes(tmp_path):
     ta, tb = _tree_bytes(a.root), _tree_bytes(b.root)
     assert sorted(ta) == sorted(tb)
     assert "corpus/documents.parquet" in ta
+    assert sorted(k for k in ta if k.startswith("wave/")) == [
+        f"wave/part-{i}.parquet" for i in range(SMALL.wave_files)]
     assert ta == tb
     _, c = gen.materialize(8, SMALL, str(tmp_path / "c"))
     assert _tree_bytes(c.root)["corpus/documents.parquet"] != \
@@ -62,6 +65,16 @@ def test_text_renders_the_token_ids():
     for i in range(len(d)):
         toks = d.tokens[d.offsets[i]:d.offsets[i + 1]]
         assert texts[i].split() == [words[t] for t in toks]
+
+
+def test_wave_follows_the_base_ids_and_deletes_hit_the_base(tmp_path):
+    import pyarrow.parquet as pq
+
+    inp, paths = gen.materialize(3, SMALL, str(tmp_path))
+    assert inp.wave.doc_ids.tolist() == list(range(300, 350))
+    assert len(inp.deletes) == 6 and inp.deletes.max() < 300
+    ids = pq.read_table(paths.wave, columns=["doc_id"]).column(0)
+    assert sorted(ids.to_pylist()) == list(range(300, 350))
 
 
 RANKED = (np.array([5, 3, 9, 1]), np.array([4.0, 3.0, 2.0, 1.0]))

@@ -4,12 +4,15 @@ waits for the previous one to finish.
 ``point_queries``  set-up builds the base index, tombstones 1% of its docs
                    (so queries run merge-on-read), opens a persisting
                    ``Searcher`` and makes the first call of each query
-                   path; then whole cycles of single queries (one per
-                   shape) and one ``topk_many`` batch run until
-                   ``--seconds`` have passed.
+                   path; the measured cycle is one query per shape and
+                   one ``topk_many`` batch.
 ``maintain``       set-up builds the base index; the measured cycle
-                   tombstones 1% of the docs, compacts the index into one
-                   scoring group, purges, and queries the result.
+                   drains an ingest wave, tombstones 1% of the base docs,
+                   compacts under the default scoring-group floor,
+                   purges, and queries the result.
+
+The measured cycle is a fixed amount of work; ``--seconds`` does not
+change it.
 
 Every timed call goes through :class:`optrace.Ops`; its output is checked
 against :class:`model.Model` after its timer stops.
@@ -31,19 +34,22 @@ from optrace import Op, Ops
 
 K = 10
 N_BUCKETS = 16
-#: both workloads: 2k docs (~1.3 MB of parquet), 1% of them tombstoned.
-#: Per-run cost is dominated by session start and the JVM-cold first
-#: build whatever the size, so the size is set by query cost per cycle.
-SIZES = gen.Sizes(base_docs=2_000, delete_frac=0.01)
-#: one cycle of the point loop: each single-query shape, then a batch
+#: the base corpus, a wave of four files (``maintain`` only) and 1% of
+#: the base docs to tombstone. A run costs ~30 s of session start and
+#: JVM-cold build at any size, and the broad composed query grows with
+#: the corpus (~4 s at 2k docs, 7-10 s at 6k), so 2k docs keep the 48
+#: runs of a benchmark pass inside its time budget
+SIZES = gen.Sizes(base_docs=2_000, wave_docs=500, wave_files=4,
+                  delete_frac=0.01)
+#: the measured point cycle: each single-query shape, then a batch
 CYCLE = gen.SHAPES + ("batch",)
 #: set-up runs one call per query path: ``and`` plans and scores like
 #: ``or``, ``glob`` goes through the composed path, and ``near`` through
 #: the same match-and-sort plan as ``phrase``
 WARM = ("or", "phrase", "composed", "batch")
-#: the maintain workload's queries after purge: the batch covers ranked
-#: OR queries, the phrase covers the rewritten position streams
-POST_SET = ("phrase", "batch")
+#: the maintain workload's queries after purge: the OR query covers
+#: ranking and the purged stats, the phrase the rewritten position streams
+POST_SET = ("or", "phrase")
 
 
 @dataclass
@@ -152,22 +158,12 @@ def _execute(searcher: Any, shape: str, spec: Any) -> tuple[float, list]:
     return plan_s, df.collect()
 
 
-def _spec(inputs: gen.Inputs, shape: str, i: int) -> Any:
-    specs = inputs.queries[shape]
-    return specs[i % len(specs)]
-
-
-def _warm_spec(inputs: gen.Inputs, shape: str) -> Any:
-    if shape == "batch":
-        return inputs.queries["batch"][0]
-    return inputs.queries["warm"][shape]
-
-
-def build(run: Run) -> None:
+def build(run: Run, n_segments: int | None = None) -> None:
     from glug_spark.index.pipeline import build_index
 
     summary = run.timed("pipeline", "build", lambda: build_index(
-        run.spark, run.paths.corpus, run.index, n_buckets=N_BUCKETS))
+        run.spark, run.paths.corpus, run.index, n_buckets=N_BUCKETS,
+        n_segments=n_segments))
     run.model.add(run.inputs.base)
     run.facts["pipeline.postings"] = float(summary["n_postings"])
     for key in ("segments", "encoded_bytes"):
@@ -181,6 +177,16 @@ def open_searcher(run: Run, persist: bool) -> Any:
         run.spark, run.index, n_buckets=N_BUCKETS, persist=persist))
 
 
+def ingest(run: Run) -> None:
+    """Drain the wave (doc ids disjoint from the build's) into the index;
+    it lands as new segments, about one per core."""
+    from glug_spark.streaming.ingest import ingest_available
+
+    run.timed("ingest", "wave", lambda: ingest_available(
+        run.spark, run.paths.wave, run.index, n_buckets=N_BUCKETS))
+    run.model.add(run.inputs.wave)
+
+
 def tombstone(run: Run) -> None:
     from glug_spark.index.deletes import delete_docs
 
@@ -190,7 +196,7 @@ def tombstone(run: Run) -> None:
     run.model.tombstone(deletes)
 
 
-def point_queries(run: Run, seconds: float) -> None:
+def point_queries(run: Run) -> None:
     """Queries on an index with 1% tombstoned docs, so every call runs the
     merge-on-read path and is checked against its semantics."""
     build(run)
@@ -198,34 +204,31 @@ def point_queries(run: Run, seconds: float) -> None:
     se = open_searcher(run, persist=True)
     try:
         for shape in WARM:  # first execution of each query path: set-up
-            run.checked("warm", shape, _warm_spec(run.inputs, shape), se)
-        t0, n0 = time.perf_counter(), len(run.ops.ops)
-        cycle = 1
-        while cycle == 1 or time.perf_counter() - t0 < seconds:
-            for shape in CYCLE:
-                run.checked("measure", shape, _spec(run.inputs, shape, cycle),
-                            se)
-            cycle += 1
-        run.cycle_s = _ops_s(run, n0) / (cycle - 1)
+            run.checked("warm", shape, run.inputs.queries["warm"][shape], se)
+        n0 = len(run.ops.ops)
+        for shape in CYCLE:
+            run.checked("measure", shape, run.inputs.queries[shape], se)
+        run.cycle_s = _ops_s(run, n0)
         run.facts["storage.cached_mb"] = _cached_mb(run.spark)
     finally:
         se.close()
 
 
-def maintain(run: Run, seconds: float) -> None:
-    """One maintenance cycle, whatever ``seconds`` says: the work is a
-    fixed sequence, not a loop."""
+def maintain(run: Run) -> None:
+    """Write path, then the queries that check what it left."""
     from glug_spark.index.compact import compact_index
     from glug_spark.index.deletes import purge_deletes
 
-    build(run)
+    # one segment more than cores (the adaptive split's layout for a
+    # corpus of that many thousand docs): with the wave's ~cores segments
+    # compaction then has more groups than the product's default floor
+    # (2 x cores) keeps, on any core count
+    build(run, n_segments=run.spark.sparkContext.defaultParallelism + 1)
     n0 = len(run.ops.ops)
+    ingest(run)
     tombstone(run)
-    # the 2k-doc build has two segments, under the default floor of two
-    # scoring groups per core, where compaction would merge nothing; one
-    # group makes it merge every fragmented tail run
-    summary = run.timed("compact", "compact", lambda: compact_index(
-        run.spark, run.index, min_groups=1))
+    summary = run.timed("compact", "compact",
+                        lambda: compact_index(run.spark, run.index))
     for key in ("rows_before", "rows_after", "groups"):
         run.facts[f"compact.{key}"] = float(summary[key])
     purged = run.timed("purge", "purge",
@@ -236,7 +239,7 @@ def maintain(run: Run, seconds: float) -> None:
     se = open_searcher(run, persist=False)  # a Searcher pins its layout
     try:
         for shape in POST_SET:
-            run.checked("measure", shape, _spec(run.inputs, shape, 1), se)
+            run.checked("measure", shape, run.inputs.queries[shape], se)
     finally:
         se.close()
     run.cycle_s = _ops_s(run, n0)
