@@ -79,7 +79,11 @@ def main(argv: list[str] | None = None) -> int:
     q.add_argument("query")
     q.add_argument("--index", required=True)
     q.add_argument("-k", type=int, default=10)
-    q.add_argument("--buckets", type=int, default=16)
+    q.add_argument(
+        "--buckets", type=int, default=None,
+        help="term-bucket count (default: the index's own; a different "
+             "value is an error)",
+    )
     q.add_argument(
         "--urls", action="store_true",
         help="append each hit's url from the index docmap "
@@ -99,7 +103,11 @@ def main(argv: list[str] | None = None) -> int:
     qm.add_argument("file")
     qm.add_argument("--index", required=True)
     qm.add_argument("-k", type=int, default=10)
-    qm.add_argument("--buckets", type=int, default=16)
+    qm.add_argument(
+        "--buckets", type=int, default=None,
+        help="term-bucket count (default: the index's own; a different "
+             "value is an error)",
+    )
 
     ls = sub.add_parser("list", help="glug-style select listing")
     ls.add_argument("expression")
@@ -215,6 +223,18 @@ def main(argv: list[str] | None = None) -> int:
     from glug_spark.session import get_spark
 
     spark = get_spark("glug_spark_cli")
+
+    def open_searcher() -> "Searcher":
+        """query/query-many: a --buckets that differs from the index's
+        own is a usage error, not an empty result."""
+        from glug_spark.query.searcher import Searcher
+
+        try:
+            return Searcher(spark, args.index, n_buckets=args.buckets,
+                            persist=False)
+        except ValueError as e:
+            parser.error(f"{args.command}: {e}")
+
     try:
         if args.command == "build":
             from glug_spark.index.pipeline import build_index
@@ -226,31 +246,20 @@ def main(argv: list[str] | None = None) -> int:
             )
             print(json.dumps(summary))
         elif args.command == "query":
-            if args.urls or args.snippets:
-                from glug_spark.query.searcher import Searcher
-
-                with Searcher(spark, args.index, n_buckets=args.buckets,
-                              persist=False) as s:
-                    rows = (
-                        s.search(args.query, k=args.k, with_urls=True,
-                                 with_snippets=args.snippets)
-                        .orderBy("rank").collect()
-                    )
-                for r in rows:
-                    line = (f"{r['rank']}\t{r['doc_id']}\t{r['score']}"
-                            f"\t{r['url']}")
-                    if args.snippets:
-                        line += f"\t{r['snippet']}"
-                    print(line)
-            else:
-                from glug_spark.query.execute import search_indexed
-
-                rows = search_indexed(
-                    spark, args.index, args.query, k=args.k,
-                    n_buckets=args.buckets,
-                ).collect()
-                for r in rows:
-                    print(f"{r['rank']}\t{r['doc_id']}\t{r['score']}")
+            urls = args.urls or args.snippets
+            with open_searcher() as s:
+                rows = (
+                    s.search(args.query, k=args.k, with_urls=urls,
+                             with_snippets=args.snippets)
+                    .orderBy("rank").collect()
+                )
+            for r in rows:
+                line = f"{r['rank']}\t{r['doc_id']}\t{r['score']}"
+                if urls:
+                    line += f"\t{r['url']}"
+                if args.snippets:
+                    line += f"\t{r['snippet']}"
+                print(line)
         elif args.command == "curate":
             from glug_spark.operators.curation import curate_docs
 
@@ -271,8 +280,6 @@ def main(argv: list[str] | None = None) -> int:
                 "fuzzy": args.fuzzy,
             }))
         elif args.command == "query-many":
-            from glug_spark.query.searcher import Searcher
-
             queries: dict[str, str] = {}
             with open(args.file, encoding="utf-8") as f:
                 for i, line in enumerate(f):
@@ -293,8 +300,7 @@ def main(argv: list[str] | None = None) -> int:
                             f"line {i + 1} of {args.file}"
                         )
                     queries[qid] = q
-            with Searcher(spark, args.index, n_buckets=args.buckets,
-                          persist=False) as s:
+            with open_searcher() as s:
                 rows = (
                     s.search_many(queries, k=args.k)
                     .orderBy("query_id", "rank").collect()

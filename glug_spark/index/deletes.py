@@ -59,8 +59,7 @@ DELETES_DIR = "deletes"
 PURGE_LEDGER = "purge_ledger"
 
 #: tombstone set per index_dir (sorted int64 array, or None when the
-#: index has no deletes) — same single-writer cache discipline as the
-#: segmap/collection caches in query.wand
+#: index has no deletes); invalidated by delete/purge in this process
 _DELETED_CACHE: dict[str, "np.ndarray | None"] = {}
 
 
@@ -172,17 +171,9 @@ def not_deleted_mask(deleted: "np.ndarray | None",
     return deleted[pos] != ids
 
 
-def resolve_deleted(deleted: object) -> "np.ndarray | None":
-    """Worker-side unwrap of the tombstone set: scorers accept either a
-    plain sorted array (one-shot module-function queries) or a Spark
-    ``Broadcast`` of it (the Searcher service shape — torrent-shipped
-    once per executor and reused across jobs, instead of re-pickling
-    the array into every query's task closure; at production tombstone
-    counts between purges that closure would be MBs per query)."""
-    if deleted is None:
-        return None
-    value = getattr(deleted, "value", None)
-    return value if value is not None else deleted  # type: ignore[return-value]
+def resolve_deleted(deleted: "Broadcast | None") -> "np.ndarray | None":
+    """Worker-side unwrap of a Searcher's broadcast tombstone set."""
+    return None if deleted is None else deleted.value
 
 
 #: JVM varbyte decode depth for the first-doc prune: 9 × 7 bits = 63

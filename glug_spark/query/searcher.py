@@ -1,12 +1,12 @@
-"""Query-many handle: one index opened once, many low-latency queries.
+"""Index query planner: one index opened once, every query shape
+answered from it.
 
-The module-level functions in :mod:`glug_spark.query.wand` re-read the
-index metadata per call — always correct, but each query pays parquet
-listing/footers, a stats lookup job and plan analysis again (~2× the
-latency of the query itself on a warm executor). A :class:`Searcher`
-is the service shape: it opens the index ONCE, pins the tiny metadata
-(collection stats, segment map) on the driver, keeps the postings /
-term_stats DataFrames analyzed, and optionally ``persist()``s them.
+A :class:`Searcher` opens the index ONCE: it reads the build
+parameters (``params/``: term-bucket and docmap moduli), pins the tiny
+metadata (collection stats, segment map, tombstone set) on the driver,
+keeps the postings / term_stats DataFrames analyzed, and optionally
+``persist()``s them. Every method plans one Spark query over those
+handles; the per-group NumPy kernels live in :mod:`glug_spark.query.wand`.
 
 Scale posture: term_stats is vocab-sized (fine to persist); postings
 persist is a knob — on a 100 TB index you leave it off and let
@@ -21,11 +21,34 @@ A Searcher snapshots the index layout at open time: reopen after
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from typing import Callable
+
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from glug_spark.query import wand
-from glug_spark.query.parser import parse_query
-from glug_spark.index.pipeline import python_bucket
+from glug_spark.query.parser import QueryPlan, parse_query
+from glug_spark.index.pipeline import N_DOC_BUCKETS, python_bucket
+
+_MATCH_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType())])
+_BATCH_SCHEMA = T.StructType([
+    T.StructField("query_id", T.StringType()),
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("raw_score", T.DoubleType()),
+])
+_BATCH_RESULT = "query_id string, rank int, doc_id long, score double"
+
+Members = list[tuple[str, str]]
+#: per-group kernel: one scoring group's posting rows → its result rows
+Scorer = Callable[[pd.DataFrame], pd.DataFrame]
+
+
+def _plan(query: str) -> QueryPlan:
+    plan = parse_query(query)
+    if not plan.groups and not plan.phrases and not plan.nears:
+        raise ValueError(f"query has no positive constraint: {query!r}")
+    return plan
 
 
 class Searcher:
@@ -33,14 +56,29 @@ class Searcher:
         self,
         spark: SparkSession,
         index_dir: str,
-        n_buckets: int = 16,
+        n_buckets: int | None = None,
         persist: bool = True,
     ) -> None:
+        """``n_buckets`` is optional: the term-bucket count is read from
+        the index's ``params/``. A value that differs from the build's
+        raises — it would prune every scan to the wrong bucket
+        partitions and return an empty top-k."""
         from glug_spark.index.compact import read_segmap
+        from glug_spark.index.deletes import read_deleted_ids
 
         self.spark = spark
         self.index_dir = index_dir
-        self.n_buckets = n_buckets
+        params = spark.read.parquet(f"{index_dir}/params").collect()[0].asDict()
+        built = int(params["n_buckets"])
+        if n_buckets is not None and n_buckets != built:
+            raise ValueError(
+                f"{index_dir} was built with n_buckets={built}, not "
+                f"{n_buckets}"
+            )
+        self.n_buckets = built
+        #: docmap modulus (indexes from before the params column used
+        #: the default)
+        self.n_doc_buckets = int(params.get("n_doc_buckets") or N_DOC_BUCKETS)
         self._persisted: list[DataFrame] = []
 
         self.postings = spark.read.parquet(f"{index_dir}/postings")
@@ -49,7 +87,6 @@ class Searcher:
         coll = spark.read.parquet(f"{index_dir}/collection").collect()[0]
         self.avgdl = float(coll["avgdl"])
         self.n_docs = int(coll["n_docs"])
-        from glug_spark.index.deletes import read_deleted_ids
 
         #: merge-on-read tombstone set, pinned at open like the segmap.
         #: Shipped as a Spark broadcast (torrent, cached per executor
@@ -71,18 +108,14 @@ class Searcher:
     def _warm(self) -> None:
         """Front-load the first query's fixed costs at open time (the
         service shape pays them once per handle, not on a user query):
-        spin up the Arrow Python workers with a one-row groupBy kernel
-        job, and touch the postings parquet footers via a metadata-only
-        count (column-pruned count-star — no posting blob is read, and
-        the persisted cache is NOT materialized)."""
-        import pandas as pd  # noqa: F401 — worker-side import warm
-
-        (
-            self.spark.createDataFrame([(1,)], "x int")
-            .groupBy("x")
-            .applyInPandas(lambda p: p, schema="x int")
-            .count()
-        )
+        spin up the Arrow Python workers with a one-row run of the
+        per-group kernel path, and touch the postings parquet footers
+        via a metadata-only count (column-pruned count-star — no posting
+        blob is read, and the persisted cache is NOT materialized)."""
+        self._by_group(
+            self.spark.createDataFrame([(1,)], "grp long"),
+            lambda p: p, "grp long",
+        ).count()
         self.spark.read.parquet(f"{self.index_dir}/postings").count()
 
     def close(self) -> None:
@@ -99,13 +132,155 @@ class Searcher:
     def __exit__(self, *exc: object) -> None:
         self.close()
 
-    # --- internals -------------------------------------------------------
+    # --- planning helpers -------------------------------------------------
 
-    def _with_grp(self, rows: DataFrame) -> DataFrame:
+    def _bucket_pruned(self, df: DataFrame, terms: list[str]) -> DataFrame:
+        buckets = sorted({python_bucket(t, self.n_buckets) for t in terms})
+        return df.where(F.col("bucket").isin(buckets))
+
+    def _idf(self, terms: list[str]) -> DataFrame:
+        """(term, idf) rows of explicit query terms — broadcast-joined
+        onto the posting scan instead of a separate driver lookup (a
+        vocab-absent term simply joins to nothing)."""
+        return (
+            self._bucket_pruned(self.term_stats, terms)
+            .where(F.col("term").isin(terms))
+            .select("term", "idf")
+        )
+
+    def _scan(self, terms: list[str] | None, pred: F.Column | None,
+              cols: list[str], *sides: DataFrame) -> DataFrame:
+        """The posting rows one query reads, keyed by scoring group.
+
+        The scan prunes to the bucket partitions of ``terms`` (None when
+        a glob member leaves the bucket set open) and pushes ``pred``
+        into parquet (row-group skipping on the term-sorted layout);
+        ``cols`` column-prunes the read. Each query-sized ``sides``
+        table is then broadcast-joined on ``term``. ``grp`` is the
+        segment on an uncompacted index; after compaction the tiny
+        ``segmap/`` is broadcast-joined so all runs of a coarsened
+        group — merged or untouched — co-group."""
+        rows = self.postings
+        if terms is not None:
+            rows = self._bucket_pruned(rows, terms)
+        if pred is not None:
+            rows = rows.where(pred)
+        rows = rows.select(*cols)
+        for side in sides:
+            rows = rows.join(F.broadcast(side), "term")
         if self.segmap is None:
             return rows.withColumn("grp", F.col("segment"))
         return rows.join(F.broadcast(self.segmap), "segment", "left").withColumn(
             "grp", F.coalesce("grp", F.col("segment"))
+        )
+
+    def _composed_scan(self, member_lists: list[Members],
+                       members: DataFrame, positions: bool) -> DataFrame:
+        """Scan for composed queries, one member list per query. Bucket
+        partitions prune when EVERY member is an explicit term; the
+        pushable (In|StartsWith) conjunct applies when every query has a
+        pushable form. Both are redundant with the exact member
+        semantics, which ride the ``members`` join. Positions are read
+        only when a phrase/NEAR needs them."""
+        flat = [m for lst in member_lists for m in lst]
+        terms = (
+            [v for _, v in flat] if all(kind == "term" for kind, _ in flat)
+            else None
+        )
+        pred = None
+        pushables = [wand._pushable_member_pred(lst) for lst in member_lists]
+        if all(p is not None for p in pushables):
+            pred = pushables[0]
+            for p in pushables[1:]:
+                pred = pred | p
+        cols = wand._SCORING_COLS + (
+            ["positions", "pos_offsets"] if positions else []
+        )
+        return self._scan(terms, pred, cols, members)
+
+    def _roles(self, groups: list[Members], negations: Members,
+               phrases: list[list[str]],
+               nears: list[tuple[str, str, int, bool]],
+               ) -> tuple[DataFrame, Members, bool]:
+        """One composed query's term roles (idf, group bitmask, negation
+        and phrase flags — computed JVM-side over term_stats, so glob
+        expansion never reaches the driver), its flat member list for
+        scan pruning, and whether it needs positions."""
+        pos_words = list(dict.fromkeys(
+            [w for ph in phrases for w in ph]
+            + [w for a, b, _, _ in nears for w in (a, b)]
+        ))
+        members = wand.build_members(self.term_stats, groups, negations,
+                                     pos_words)
+        flat = ([m for g in groups for m in g] + negations
+                + [("term", w) for w in pos_words])
+        return members, flat, bool(pos_words)
+
+    def _by_group(self, rows: DataFrame, kernel: Scorer,
+                  schema: "T.StructType | str") -> DataFrame:
+        """The query layer's one Python kernel boundary: ``kernel`` runs
+        once per scoring group over that group's rows, behind the
+        explicit grp exchange of :func:`wand.scorer_partitions`."""
+        return wand.scorer_partitions(rows).groupBy("grp").applyInPandas(
+            kernel, schema=schema
+        )
+
+    def _topk(self, rows: DataFrame, scorer: Scorer, k: int) -> DataFrame:
+        """One query: k-bounded per-group results, then the one-job
+        global merge + rank (:func:`wand._ranked_bounded`)."""
+        per_group = self._by_group(rows, lambda pdf: scorer(pdf),
+                                   wand._SCORE_SCHEMA)
+        return wand._ranked_bounded(per_group, k)
+
+    def _batch(self, rows: DataFrame, scorer_for: Callable[[str], Scorer],
+               k: int) -> DataFrame:
+        """Many queries in one job: rows tagged with ``query_id`` are
+        scored per (query, group) by ``scorer_for(query_id)``, then
+        ranked per query by a ``query_id`` window:
+        (query_id, rank, doc_id, score)."""
+        def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
+            outs = []
+            for qid, qpdf in pdf.groupby("query_id", sort=False):
+                res = scorer_for(qid)(qpdf)
+                res.insert(0, "query_id", qid)
+                outs.append(res)
+            return pd.concat(outs) if outs else pd.DataFrame(
+                {"query_id": [], "doc_id": [], "raw_score": []}
+            ).astype({"query_id": "object", "doc_id": "int64",
+                      "raw_score": "float64"})
+
+        per_group = self._by_group(rows, score_group, _BATCH_SCHEMA)
+        w = Window.partitionBy("query_id").orderBy(
+            F.desc("raw_score"), F.asc("doc_id")
+        )
+        return (
+            per_group.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select("query_id", "rank", "doc_id",
+                    F.round("raw_score", 6).alias("score"))
+        )
+
+    def _match_docs(self, words: list[str],
+                    hits: Callable[[pd.DataFrame], np.ndarray]) -> DataFrame:
+        """doc_id-sorted docs of a positional match: ``hits(pdf)`` gives
+        one group's matching doc_ids from the rows of ``words``;
+        tombstoned docs are masked out."""
+        uniq = list(dict.fromkeys(words))
+        cols = [c for c in self.postings.columns if c != "bucket"]
+        rows = self._scan(uniq, F.col("term").isin(uniq), cols)
+        deleted = self.deleted
+
+        def match_segment(pdf: pd.DataFrame) -> pd.DataFrame:
+            from glug_spark.index.deletes import (
+                not_deleted_mask, resolve_deleted,
+            )
+
+            ids = hits(pdf)
+            ids = ids[not_deleted_mask(resolve_deleted(deleted), ids)]
+            return pd.DataFrame({"doc_id": ids}).astype({"doc_id": "int64"})
+
+        return wand._sorted_docs(
+            self._by_group(rows, match_segment, _MATCH_SCHEMA)
         )
 
     def attach_urls(self, results: DataFrame,
@@ -120,10 +295,7 @@ class Searcher:
         deterministic match window of query.snippet computed on the doc
         store's ``text`` column — read only for the pruned buckets, and
         not read at all for url-only lookups (parquet column pruning)."""
-        from glug_spark.index.pipeline import (
-            docmap_n_buckets,
-            read_docmap,
-        )
+        from glug_spark.index.pipeline import read_docmap
         from glug_spark.query.snippet import snippet_col
 
         dm = read_docmap(self.spark, self.index_dir)
@@ -133,10 +305,9 @@ class Searcher:
                 "predates docmap; rebuild (build_index writes it) to "
                 "use with_urls"
             )
-        n = docmap_n_buckets(self.spark, self.index_dir)
         res = results.withColumn(
             "doc_bucket",
-            F.pmod(F.col("doc_id"), F.lit(n)).cast("int"),
+            F.pmod(F.col("doc_id"), F.lit(self.n_doc_buckets)).cast("int"),
         )
         out_cols = [c for c in results.columns]
         side: list[F.Column] = [F.col("url")]
@@ -164,32 +335,21 @@ class Searcher:
              conjunctive: bool = False,
              with_urls: bool = False,
              with_snippets: bool = False) -> DataFrame:
-        """Rank-identical to wand.wand_topk over the same index.
+        """Exact BM25 top-k (rank, doc_id, score) — rank-identical to
+        query.bm25.bm25_topk over the indexed corpus.
 
-        Single Spark job: idf rides a broadcast stats join instead of a
-        separate driver lookup (a vocab-absent term simply joins to
-        nothing; the conjunctive scorer already returns empty when a
-        term's list is missing from its group)."""
+        3 Spark jobs warm (pinned in tests/test_plan_shape.py): idf
+        rides a broadcast stats join instead of a separate driver
+        lookup (a vocab-absent term simply joins to nothing; the
+        conjunctive scorer already returns empty when a term's list is
+        missing from its group)."""
         uniq = list(dict.fromkeys(terms))
-        buckets = sorted({python_bucket(t, self.n_buckets) for t in uniq})
-        stats = (
-            self.term_stats
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-            .select("term", "idf")
-        )
-        rows = self._with_grp(
-            self.postings
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-            .select(*wand._SCORING_COLS)
-            .join(F.broadcast(stats), "term")
-        )
+        rows = self._scan(uniq, F.col("term").isin(uniq), wand._SCORING_COLS,
+                          self._idf(uniq))
         scorer = wand.make_segment_scorer(
-            uniq, None, self.avgdl, k, conjunctive, deleted=self.deleted
+            uniq, self.avgdl, k, conjunctive, deleted=self.deleted
         )
-        per_group = wand.scorer_partitions(rows).groupBy("grp").applyInPandas(
-            lambda pdf: scorer(pdf), schema=wand._SCORE_SCHEMA
-        )
-        out = wand._ranked_bounded(per_group, k)
+        out = self._topk(rows, scorer, k)
         if with_urls or with_snippets:
             return self.attach_urls(
                 out, snippet_terms=uniq if with_snippets else None
@@ -197,7 +357,7 @@ class Searcher:
         return out
 
     def topk_many(self, queries: dict[str, list[str]], k: int = 10) -> DataFrame:
-        """MANY disjunctive top-k queries in ONE Spark job:
+        """MANY disjunctive top-k queries in ONE Spark query:
         (query_id, rank, doc_id, score).
 
         The per-query latency floor at local[*] is the Arrow groupBy
@@ -208,94 +368,51 @@ class Searcher:
         runs the MaxScore kernel per (query, group). Each query's
         result is rank-identical to :meth:`topk` (asserted by tests).
         """
-        import pandas as pd
-        from pyspark.sql import types as T
-
         qitems = [(qid, t) for qid, terms in queries.items()
                   for t in dict.fromkeys(terms)]
         if not qitems:
-            return self.spark.createDataFrame(
-                [], "query_id string, rank int, doc_id long, score double"
-            )
+            return self.spark.createDataFrame([], _BATCH_RESULT)
         qterms = self.spark.createDataFrame(
             qitems, "query_id string, term string"
         )
         all_terms = sorted({t for _, t in qitems})
-        buckets = sorted({python_bucket(t, self.n_buckets) for t in all_terms})
-        stats = (
-            self.term_stats
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(all_terms))
-            .select("term", "idf")
-        )
-        rows = self._with_grp(
-            self.postings
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(all_terms))
-            .select(*wand._SCORING_COLS)
-            .join(F.broadcast(qterms), "term")
-            .join(F.broadcast(stats), "term")
-        )
+        rows = self._scan(all_terms, F.col("term").isin(all_terms),
+                          wand._SCORING_COLS, qterms, self._idf(all_terms))
         terms_by_query = {qid: list(dict.fromkeys(t)) for qid, t in queries.items()}
-        avgdl = self.avgdl
-        deleted = self.deleted
+        avgdl, deleted = self.avgdl, self.deleted
+        return self._batch(rows, lambda qid: wand.make_segment_scorer(
+            terms_by_query[qid], avgdl, k, False, deleted=deleted
+        ), k)
 
-        schema = T.StructType([
-            T.StructField("query_id", T.StringType()),
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("raw_score", T.DoubleType()),
-        ])
-
-        def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            outs = []
-            for qid, qpdf in pdf.groupby("query_id", sort=False):
-                scorer = wand.make_segment_scorer(
-                    terms_by_query[qid], None, avgdl, k, False,
-                    deleted=deleted,
-                )
-                res = scorer(qpdf)
-                res.insert(0, "query_id", qid)
-                outs.append(res)
-            return pd.concat(outs) if outs else pd.DataFrame(
-                {"query_id": [], "doc_id": [], "raw_score": []}
-            ).astype({"query_id": "object", "doc_id": "int64",
-                      "raw_score": "float64"})
-
-        per_group = wand.scorer_partitions(rows).groupBy("grp").applyInPandas(score_group, schema=schema)
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy("query_id").orderBy(
-            F.desc("raw_score"), F.asc("doc_id")
-        )
-        return (
-            per_group.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id",
-                    F.round("raw_score", 6).alias("score"))
-        )
-
-    def composed_topk(self, groups: list[list[tuple[str, str]]],
-                      negations: list[tuple[str, str]] | None = None,
+    def composed_topk(self, groups: list[Members],
+                      negations: Members | None = None,
                       phrases: list[list[str]] | None = None,
                       k: int = 10,
                       nears: list[tuple[str, str, int, bool]] | None = None,
                       ) -> DataFrame:
+        """Exact top-k for a composed query (AND of disjunctive groups,
+        minus negations, constrained by phrases and proximity windows).
+
+        Fully distributed glob expansion: the matched vocabulary never
+        reaches the driver — term_stats rows matching any member
+        predicate are broadcast-joined onto the posting scan, delivering
+        idf and the per-term role flags as columns, and the filters run
+        INSIDE the MaxScore kernel, before θ-seeding and before each
+        group's local top-k (exact: a selective filter can never starve
+        the result)."""
         negations = negations or []
         phrases = phrases or []
         nears = nears or []
-        pos_words = list(dict.fromkeys(
-            [w for ph in phrases for w in ph]
-            + [w for a, b, _, _ in nears for w in (a, b)]
-        ))
-        if not groups and not pos_words:
+        if not groups and not phrases and not nears:
             raise ValueError("composed query has no positive constraint")
-        members = wand.build_members(
-            self.term_stats, groups, negations, pos_words
-        )
-        return wand._composed_from_parts(
-            self.spark, self.postings, members, self._with_grp, self.avgdl,
-            groups, negations, phrases, k, self.n_buckets,
-            nears=nears,
+        members, flat, positions = self._roles(groups, negations, phrases,
+                                               nears)
+        rows = self._composed_scan([flat], members, positions)
+        scorer = wand.make_composed_scorer(
+            len(groups), phrases, self.avgdl, k, nears=nears,
             deleted=self.deleted,
         )
+        return self._topk(rows, scorer, k)
 
     def glob_topk(self, glob: str, k: int = 10) -> DataFrame:
         return self.composed_topk(groups=[[("glob", glob)]], k=k)
@@ -303,14 +420,13 @@ class Searcher:
     def search(self, query: str, k: int = 10,
                with_urls: bool = False,
                with_snippets: bool = False) -> DataFrame:
-        """glug-dialect query string → exact top-k (see execute.search).
+        """glug-dialect query string → exact top-k, rank-identical to
+        the full-scan reference execute.search.
 
         Snippets use the query's literal positive terms plus its phrase
         words (a glob's matched vocabulary is per-doc, so glob-only
         queries yield NULL snippets by the closed-form rule)."""
-        plan = parse_query(query)
-        if not plan.groups and not plan.phrases and not plan.nears:
-            raise ValueError(f"query has no positive constraint: {query!r}")
+        plan = _plan(query)
         out = self.composed_topk(
             groups=plan.groups, negations=plan.negations,
             phrases=plan.phrases, k=k, nears=plan.nears,
@@ -327,168 +443,55 @@ class Searcher:
         return out
 
     def search_many(self, queries: dict[str, str], k: int = 10) -> DataFrame:
-        """MANY glug-dialect query strings in ONE Spark job:
+        """MANY glug-dialect query strings in ONE Spark query:
         (query_id, rank, doc_id, score). The composed analog of
         :meth:`topk_many` — per-query role columns ride one unioned
-        broadcast members table; the exact filtered MaxScore kernel
-        runs per (query, doc-group). Each slice is rank-identical to
+        broadcast members table and the scan prunes to the union of the
+        queries' members; the exact filtered MaxScore kernel runs per
+        (query, doc-group). Each slice is rank-identical to
         :meth:`search` (asserted by tests)."""
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        plans = {}
-        for qid, q in queries.items():
-            plan = parse_query(q)
-            if not plan.groups and not plan.phrases and not plan.nears:
-                raise ValueError(f"query has no positive constraint: {q!r}")
-            plans[qid] = plan
+        plans = {qid: _plan(q) for qid, q in queries.items()}
         if not plans:
-            return self.spark.createDataFrame(
-                [], "query_id string, rank int, doc_id long, score double"
-            )
-
+            return self.spark.createDataFrame([], _BATCH_RESULT)
         members = None
+        member_lists = []
         any_positions = False
-        all_member_lists = []
         for qid, plan in plans.items():
-            pw = list(dict.fromkeys(
-                [w for ph in plan.phrases for w in ph] + plan.near_words
-            ))
-            any_positions = any_positions or bool(pw)
-            m = wand.build_members(
-                self.term_stats, plan.groups, plan.negations, pw
-            ).withColumn("query_id", F.lit(qid))
+            m, flat, positions = self._roles(plan.groups, plan.negations,
+                                             plan.phrases, plan.nears)
+            m = m.withColumn("query_id", F.lit(qid))
             members = m if members is None else members.unionByName(m)
-            all_member_lists.append(
-                [mm for g in plan.groups for mm in g] + plan.negations
-                + [("term", w) for w in pw]
-            )
-
-        # scan pruning, same as composed_topk but unioned across the
-        # batch: bucket partitions prune when EVERY query's members are
-        # explicit terms; the pushable (In|StartsWith) conjunct applies
-        # when every query has a pushable form — row-group skipping on
-        # the term-sorted layout, exact semantics still ride the join
-        postings = self.postings
-        flat = [m for lst in all_member_lists for m in lst]
-        if all(kind == "term" for kind, _ in flat):
-            buckets = sorted({
-                python_bucket(v, self.n_buckets) for _, v in flat
-            })
-            postings = postings.where(F.col("bucket").isin(buckets))
-        pushables = [wand._pushable_member_pred(lst) for lst in all_member_lists]
-        if all(p is not None for p in pushables):
-            pred = pushables[0]
-            for p in pushables[1:]:
-                pred = pred | p
-            postings = postings.where(pred)
-
-        cols = wand._SCORING_COLS + (
-            ["positions", "pos_offsets"] if any_positions else []
-        )
-        rows = self._with_grp(
-            postings.select(*cols).join(F.broadcast(members), "term")
-        )
-
+            member_lists.append(flat)
+            any_positions = any_positions or positions
+        rows = self._composed_scan(member_lists, members, any_positions)
         meta = {
             qid: (len(plan.groups), plan.phrases, plan.nears)
             for qid, plan in plans.items()
         }
-        avgdl = self.avgdl
-        deleted = self.deleted
+        avgdl, deleted = self.avgdl, self.deleted
 
-        schema = T.StructType([
-            T.StructField("query_id", T.StringType()),
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("raw_score", T.DoubleType()),
-        ])
+        def scorer_for(qid: str) -> Scorer:
+            n_groups, phrases, nears = meta[qid]
+            return wand.make_composed_scorer(n_groups, phrases, avgdl, k,
+                                             nears=nears, deleted=deleted)
 
-        def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            outs = []
-            for qid, qpdf in pdf.groupby("query_id", sort=False):
-                n_groups, phrases, nears = meta[qid]
-                scorer = wand.make_composed_scorer(n_groups, phrases, avgdl,
-                                                   k, nears=nears,
-                                                   deleted=deleted)
-                res = scorer(qpdf)
-                res.insert(0, "query_id", qid)
-                outs.append(res)
-            return pd.concat(outs) if outs else pd.DataFrame(
-                {"query_id": [], "doc_id": [], "raw_score": []}
-            ).astype({"query_id": "object", "doc_id": "int64",
-                      "raw_score": "float64"})
-
-        per_group = wand.scorer_partitions(rows).groupBy("grp").applyInPandas(score_group, schema=schema)
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy("query_id").orderBy(
-            F.desc("raw_score"), F.asc("doc_id")
-        )
-        return (
-            per_group.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id",
-                    F.round("raw_score", 6).alias("score"))
-        )
+        return self._batch(rows, scorer_for, k)
 
     def phrase_docs(self, phrase: list[str]) -> DataFrame:
-        uniq = list(dict.fromkeys(phrase))
-        buckets = sorted({python_bucket(t, self.n_buckets) for t in uniq})
-        rows = self._with_grp(
-            self.postings
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-            .drop("bucket")
-        )
+        """doc_ids containing the exact adjacent-token phrase, sorted —
+        identical to query.bm25.phrase_docs over the indexed corpus."""
         words = list(phrase)
-        deleted = self.deleted
-
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        def match_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            from glug_spark.index.deletes import (
-                not_deleted_mask, resolve_deleted,
-            )
-
-            hits = wand._phrase_hits_segment(pdf, words)
-            hits = hits[not_deleted_mask(resolve_deleted(deleted), hits)]
-            return pd.DataFrame({"doc_id": hits}).astype({"doc_id": "int64"})
-
-        matched = wand.scorer_partitions(rows).groupBy("grp").applyInPandas(
-            match_segment,
-            schema=T.StructType([T.StructField("doc_id", T.LongType())]),
+        return self._match_docs(
+            words, lambda pdf: wand._phrase_hits_segment(pdf, words)
         )
-        return wand._sorted_docs(matched)
 
     def near_docs(self, term_a: str, term_b: str, slop: int = 3,
                   ordered: bool = False) -> DataFrame:
-        """Proximity (NEAR) match over the pinned postings — same
-        output as wand.near_docs_indexed on this index."""
-        uniq = list(dict.fromkeys([term_a, term_b]))
-        buckets = sorted({python_bucket(t, self.n_buckets) for t in uniq})
-        rows = self._with_grp(
-            self.postings
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-            .drop("bucket")
+        """Proximity (NEAR) match: doc_ids where ``term_b`` occurs within
+        ``slop`` tokens of ``term_a``, sorted — identical to
+        query.bm25.near_docs over the indexed corpus."""
+        return self._match_docs(
+            [term_a, term_b],
+            lambda pdf: wand._near_hits_segment(pdf, term_a, term_b, slop,
+                                                ordered),
         )
-
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        deleted = self.deleted
-
-        def match_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            from glug_spark.index.deletes import (
-                not_deleted_mask, resolve_deleted,
-            )
-
-            hits = wand._near_hits_segment(pdf, term_a, term_b, slop,
-                                           ordered)
-            hits = hits[not_deleted_mask(resolve_deleted(deleted), hits)]
-            return pd.DataFrame({"doc_id": hits}).astype({"doc_id": "int64"})
-
-        matched = wand.scorer_partitions(rows).groupBy("grp").applyInPandas(
-            match_segment,
-            schema=T.StructType([T.StructField("doc_id", T.LongType())]),
-        )
-        return wand._sorted_docs(matched)

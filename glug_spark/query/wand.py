@@ -1,19 +1,23 @@
-"""Index-backed top-k: group-distributed MaxScore with block-max skip.
+"""Index-backed top-k kernels: group-distributed MaxScore with block-max skip.
 
-Query plan:
+:class:`~glug_spark.query.searcher.Searcher` plans every index query;
+this module holds the per-group NumPy kernels it runs and the small
+Spark helpers they share. The plan:
 
 1. term→bucket via the same md5-derived bucket used at build
    (``pipeline.bucket_col`` / ``python_bucket`` — driver-computable, so
    the posting scan prunes to the query terms' bucket partitions with
    zero planning cost; everything else is never read).
-2. term stats (df, idf): explicit terms close over a handful of
-   collected rows; glob queries stay fully distributed — the matched
-   vocabulary is joined in as an ``idf`` column, never collected.
-3. posting rows group by their SCORING GROUP → ``applyInPandas`` scores
-   each doc-space group independently (groups partition doc space —
-   also after compaction, via the ``segmap`` segment→grp mapping — so
-   per-group top-k sets cover the global top-k superset exactly).
-4. global ``orderBy(score desc, doc_id).limit(k)`` → TakeOrdered merge.
+2. term stats (idf) ride a broadcast join onto the posting scan; glob
+   queries stay fully distributed — the matched vocabulary is joined in
+   as an ``idf`` column, never collected.
+3. posting rows group by their SCORING GROUP → one grouped Arrow kernel
+   scores each doc-space group independently (groups partition doc
+   space — also after compaction, via the ``segmap`` segment→grp
+   mapping — so per-group top-k sets cover the global top-k superset
+   exactly).
+4. a global window over the k-bounded per-group results ranks the top-k
+   (:func:`_ranked_bounded`).
 
 Inside a group (NumPy, vectorized):
 
@@ -26,7 +30,7 @@ Inside a group (NumPy, vectorized):
   enter the top-k (docs absent from all essential lists are bounded by
   Σ non-essential ubs < θ). Exact, with whole lists of frequent terms
   skipped at the candidate-generation stage.
-- composed (``composed_topk``): group/negation/phrase filters are
+- composed (``make_composed_scorer``): group/negation/phrase filters are
   applied INSIDE the scorer, before θ-seeding and before the per-group
   top-k — the returned top-k is exact under filtering (no heuristic
   candidate pool; a selective filter can never starve the result).
@@ -40,69 +44,16 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from glug_spark.index import codec
 from glug_spark.index.build import K1, B
-from glug_spark.index.deletes import (
-    not_deleted_mask,
-    read_deleted_ids,
-    resolve_deleted,
-)
-from glug_spark.index.pipeline import python_bucket
+from glug_spark.index.deletes import not_deleted_mask, resolve_deleted
 
 _SCORE_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("raw_score", T.DoubleType()),
 ])
-
-#: collection stats are immutable per index build → cache per index_dir
-_COLLECTION_CACHE: dict[str, dict] = {}
-#: segment→grp map (None = never compacted); invalidated by compaction
-_SEGMAP_CACHE: dict[str, object] = {}
-
-
-def _collection(spark: SparkSession, index_dir: str) -> dict:
-    row = _COLLECTION_CACHE.get(index_dir)
-    if row is None:
-        row = spark.read.parquet(f"{index_dir}/collection").collect()[0].asDict()
-        _COLLECTION_CACHE[index_dir] = row
-    return row
-
-
-def invalidate_segmap_cache(index_dir: str) -> None:
-    _SEGMAP_CACHE.pop(index_dir, None)
-
-
-def invalidate_collection_cache(index_dir: str) -> None:
-    """Collection stats change when docs are ingested (n_docs/avgdl) —
-    streaming refresh calls this so later module-function queries in the
-    same process don't score with stale normalization."""
-    _COLLECTION_CACHE.pop(index_dir, None)
-
-
-def with_scoring_group(spark: SparkSession, index_dir: str, rows: DataFrame) -> DataFrame:
-    """Attach the scoring-group key ``grp``.
-
-    Uncompacted index: grp = segment (identity, no join). Compacted:
-    broadcast-join the tiny ``segmap/`` (one row per original segment)
-    so all runs of a coarsened group — merged or untouched — co-group.
-    """
-    if index_dir not in _SEGMAP_CACHE:
-        from glug_spark.index.compact import read_segmap
-
-        _SEGMAP_CACHE[index_dir] = read_segmap(spark, index_dir)
-    m = _SEGMAP_CACHE[index_dir]
-    if m is None:
-        return rows.withColumn("grp", F.col("segment"))
-    return rows.join(F.broadcast(m), "segment", "left").withColumn(
-        "grp", F.coalesce("grp", F.col("segment"))
-    )
-
-
-def _term_buckets(spark: SparkSession, terms: list[str], n_buckets: int) -> dict[str, int]:
-    return {t: python_bucket(t, n_buckets) for t in terms}
-
 
 def scorer_partitions(rows: DataFrame) -> DataFrame:
     """EXPLICIT grp-hash exchange feeding every ``groupBy("grp")``
@@ -367,19 +318,16 @@ def _local_topk(cand: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
 
 
 def make_segment_scorer(
-    terms: list[str], idfs: dict[str, float] | None,
-    avgdl: float, k: int, conjunctive: bool,
-    deleted: "object | None" = None,
+    terms: list[str], avgdl: float, k: int, conjunctive: bool,
+    deleted: "Broadcast | None" = None,
 ) -> "Callable[[pd.DataFrame], pd.DataFrame]":
-    """Plain top-k scorer for one doc-space group. ``idfs=None`` reads
-    idf from an ``idf`` row column instead (stats delivered by a
-    broadcast join — saves the separate stats-lookup job). ``deleted``
-    is the sorted tombstone set (merge-on-read) — a plain array or a
-    Spark Broadcast of it (see deletes.resolve_deleted): filtered
-    BEFORE θ-seeding and top-k selection, so a deleted doc can neither
-    appear nor shadow a live doc out of the exact top-k."""
+    """Plain top-k scorer for one doc-space group. idf is read from the
+    rows' ``idf`` column (stats delivered by a broadcast join — saves a
+    separate stats-lookup job). ``deleted`` is the broadcast sorted
+    tombstone set (merge-on-read): filtered BEFORE θ-seeding and top-k
+    selection, so a deleted doc can neither appear nor shadow a live
+    doc out of the exact top-k."""
     uniq_terms = list(dict.fromkeys(terms))
-    static_idfs = idfs
 
     def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
         tombs = resolve_deleted(deleted)
@@ -387,10 +335,8 @@ def make_segment_scorer(
             None if tombs is None
             else (lambda cand, lists: not_deleted_mask(tombs, cand))
         )
-        idfs = static_idfs
-        if idfs is None:
-            meta = pdf.drop_duplicates("term").set_index("term")
-            idfs = meta["idf"].astype(float).to_dict()
+        meta = pdf.drop_duplicates("term").set_index("term")
+        idfs = meta["idf"].astype(float).to_dict()
         if conjunctive:
             lists = _conjunctive_blocks(pdf, uniq_terms)
             present = [lists[t] for t in uniq_terms if t in lists]
@@ -412,17 +358,6 @@ def make_segment_scorer(
         return _local_topk(cand, scores, k)
 
     return score_segment
-
-
-def _ranked(topk: DataFrame) -> DataFrame:
-    # row_number over ≤k already-limited rows — the "No Partition
-    # Defined" WindowExec warning is expected and harmless here
-    w = Window.orderBy(F.desc("raw_score"), F.asc("doc_id"))
-    return topk.select(
-        F.row_number().over(w).alias("rank"),
-        F.col("doc_id"),
-        F.round(F.col("raw_score"), 6).alias("score"),
-    )
 
 
 def _ranked_bounded(per_group: DataFrame, k: int) -> DataFrame:
@@ -450,48 +385,6 @@ _SCORING_COLS = [
     "block_last", "block_max_tf",
     "gap_offsets", "tf_offsets", "dl_offsets",
 ]
-
-
-def wand_topk(
-    spark: SparkSession,
-    index_dir: str,
-    terms: list[str],
-    k: int = 10,
-    conjunctive: bool = False,
-    n_buckets: int = 16,
-) -> DataFrame:
-    """Top-k (rank, doc_id, score) from the encoded index — must be
-    rank-identical to query.bm25.bm25_topk on the same corpus."""
-    uniq = list(dict.fromkeys(terms))
-    buckets = sorted(set(_term_buckets(spark, uniq, n_buckets).values()))
-
-    stats = (
-        spark.read.parquet(f"{index_dir}/term_stats")
-        .where(F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-        .select("term", "df", "idf")
-        .collect()  # O(query terms), never corpus-sized
-    )
-    idfs = {r["term"]: r["idf"] for r in stats}
-    if conjunctive and len(idfs) < len(uniq):
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
-    avgdl = _collection(spark, index_dir)["avgdl"]
-
-    rows = (
-        spark.read.parquet(f"{index_dir}/postings")
-        .where(F.col("bucket").isin(buckets) & F.col("term").isin(list(idfs)))
-        # column-prune the positions blob (the largest column): scoring
-        # never touches it — only the phrase path reads positions
-        .select(*_SCORING_COLS)
-    )
-    rows = with_scoring_group(spark, index_dir, rows)
-    scorer = make_segment_scorer(
-        uniq, idfs, avgdl, k, conjunctive,
-        deleted=read_deleted_ids(spark, index_dir),
-    )
-    per_group = scorer_partitions(rows).groupBy("grp").applyInPandas(
-        lambda pdf: scorer(pdf), schema=_SCORE_SCHEMA
-    )
-    return _ranked_bounded(per_group, k)
 
 
 # --- composed queries: groups + negation + phrase, filters exact --------
@@ -629,7 +522,7 @@ def _phrase_hits_segment(pdf: pd.DataFrame, words: list[str]) -> np.ndarray:
 def make_composed_scorer(
     n_groups: int, phrases: list[list[str]], avgdl: float, k: int,
     nears: "list[tuple[str, str, int, bool]] | None" = None,
-    deleted: "object | None" = None,
+    deleted: "Broadcast | None" = None,
 ) -> "Callable[[pd.DataFrame], pd.DataFrame]":
     """Scorer for one doc-space group of a composed query.
 
@@ -779,178 +672,6 @@ def build_members(stats_df: DataFrame,
     )
 
 
-def _composed_from_parts(
-    spark: SparkSession, postings: DataFrame, members: DataFrame,
-    grp_mapper: "Callable[[DataFrame], DataFrame]", avgdl: float,
-    groups: list[list[tuple[str, str]]],
-    negations: list[tuple[str, str]],
-    phrases: list[list[str]], k: int,
-    n_buckets: int,
-    nears: "list[tuple[str, str, int, bool]] | None" = None,
-    deleted: "object | None" = None,
-) -> DataFrame:
-    """Shared tail of the composed path (module function + Searcher)."""
-    nears = nears or []
-    pos_words = list(dict.fromkeys(
-        [w for ph in phrases for w in ph]
-        + [w for a, b, _, _ in nears for w in (a, b)]
-    ))
-    # bucket pruning: only possible when every member is an explicit term
-    all_members = ([m for g in groups for m in g] + negations
-                   + [("term", w) for w in pos_words])
-    explicit_only = all(kind == "term" for kind, _ in all_members)
-    if explicit_only:
-        terms = [v for _, v in all_members]
-        buckets = sorted({python_bucket(t, n_buckets) for t in terms})
-        postings = postings.where(F.col("bucket").isin(buckets))
-    # redundant pushable conjunct → parquet row-group skipping on the
-    # term-sorted layout (the exact member semantics ride the join)
-    pushable = _pushable_member_pred(all_members)
-    if pushable is not None:
-        postings = postings.where(pushable)
-
-    # column-prune positions unless a phrase/near actually needs them
-    cols = _SCORING_COLS + (
-        ["positions", "pos_offsets"] if (phrases or nears) else []
-    )
-    rows = grp_mapper(postings.select(*cols).join(F.broadcast(members), "term"))
-
-    scorer = make_composed_scorer(len(groups), phrases, avgdl, k, nears=nears,
-                                  deleted=deleted)
-    per_group = scorer_partitions(rows).groupBy("grp").applyInPandas(
-        lambda pdf: scorer(pdf), schema=_SCORE_SCHEMA
-    )
-    return _ranked_bounded(per_group, k)
-
-
-def composed_topk(
-    spark: SparkSession,
-    index_dir: str,
-    groups: list[list[tuple[str, str]]],
-    negations: list[tuple[str, str]] | None = None,
-    phrases: list[list[str]] | None = None,
-    k: int = 10,
-    n_buckets: int = 16,
-    nears: "list[tuple[str, str, int, bool]] | None" = None,
-) -> DataFrame:
-    """Exact top-k for a composed query (AND of disjunctive groups,
-    minus negations, constrained by phrases and proximity windows),
-    straight from the index.
-
-    Fully distributed glob expansion: the matched vocabulary never
-    reaches the driver — term_stats rows matching any member predicate
-    are broadcast-joined onto the posting scan, delivering idf and the
-    per-term role flags as columns. (The broadcast side is the MATCHED
-    vocabulary — query-sized for explicit terms, at worst vocab-subset-
-    sized for short-prefix globs; the posting side is never shuffled.)
-    """
-    negations = negations or []
-    phrases = phrases or []
-    nears = nears or []
-    pos_words = list(dict.fromkeys(
-        [w for ph in phrases for w in ph]
-        + [w for a, b, _, _ in nears for w in (a, b)]
-    ))
-    if not groups and not pos_words:
-        raise ValueError("composed query has no positive constraint")
-
-    members = build_members(
-        spark.read.parquet(f"{index_dir}/term_stats"),
-        groups, negations, pos_words,
-    )
-    return _composed_from_parts(
-        spark,
-        spark.read.parquet(f"{index_dir}/postings"),
-        members,
-        lambda rows: with_scoring_group(spark, index_dir, rows),
-        _collection(spark, index_dir)["avgdl"],
-        groups, negations, phrases, k, n_buckets,
-        nears=nears,
-        deleted=read_deleted_ids(spark, index_dir),
-    )
-
-
-def docs_with_any(
-    spark: SparkSession,
-    index_dir: str,
-    terms: list[str],
-    n_buckets: int = 16,
-) -> DataFrame:
-    """Distinct doc_ids containing ANY of ``terms`` — the semi/anti-join
-    building block for composed queries (group filters, negation)."""
-    uniq = list(dict.fromkeys(terms))
-    if not uniq:
-        return spark.createDataFrame([], "doc_id long")
-    buckets = sorted({python_bucket(t, n_buckets) for t in uniq})
-    rows = (
-        spark.read.parquet(f"{index_dir}/postings")
-        .where(F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-        .select("segment", "doc_gaps")
-    )
-    rows = with_scoring_group(spark, index_dir, rows)
-    deleted = read_deleted_ids(spark, index_dir)
-
-    def decode(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = [
-            codec.delta_decode(codec.varbyte_decode(g)).astype(np.int64)
-            for g in pdf["doc_gaps"]
-        ]
-        out = np.unique(np.concatenate(ids)) if ids else np.zeros(0, np.int64)
-        out = out[not_deleted_mask(deleted, out)]
-        return pd.DataFrame({"doc_id": out})
-
-    return scorer_partitions(rows).groupBy("grp").applyInPandas(
-        lambda pdf: decode(pdf),
-        schema=T.StructType([T.StructField("doc_id", T.LongType())]),
-    ).distinct()
-
-
-def glob_topk(
-    spark: SparkSession,
-    index_dir: str,
-    glob: str,
-    k: int = 10,
-    n_buckets: int = 16,
-) -> DataFrame:
-    """Glob-pattern query from the index — one single-member group
-    through the composed path: the pattern expands against the
-    vocabulary DISTRIBUTED (term_stats join; nothing is collected)."""
-    return composed_topk(
-        spark, index_dir, groups=[[("glob", glob)]], k=k, n_buckets=n_buckets
-    )
-
-
-def phrase_docs_indexed(
-    spark: SparkSession,
-    index_dir: str,
-    phrase: list[str],
-    n_buckets: int = 16,
-) -> DataFrame:
-    """Phrase match from position lists — doc_ids containing the exact
-    adjacent-token phrase; rank-identical to query.bm25.phrase_docs."""
-    uniq = list(dict.fromkeys(phrase))
-    buckets = sorted(set(_term_buckets(spark, uniq, n_buckets).values()))
-    rows = (
-        spark.read.parquet(f"{index_dir}/postings")
-        .where(F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-        .drop("bucket")
-    )
-    rows = with_scoring_group(spark, index_dir, rows)
-
-    words = list(phrase)
-    deleted = read_deleted_ids(spark, index_dir)
-
-    def match_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        hits = _phrase_hits_segment(pdf, words)
-        hits = hits[not_deleted_mask(deleted, hits)]
-        return pd.DataFrame({"doc_id": hits}).astype({"doc_id": "int64"})
-
-    matched = scorer_partitions(rows).groupBy("grp").applyInPandas(
-        match_segment, schema=T.StructType([T.StructField("doc_id", T.LongType())])
-    )
-    return _sorted_docs(matched)
-
-
 def _sorted_docs(matched: DataFrame) -> DataFrame:
     """doc_id-sorted match set WITHOUT a range-partitioned global sort:
     ``orderBy`` samples its child to pick range boundaries, which
@@ -1023,36 +744,3 @@ def _near_hits_segment(pdf: pd.DataFrame, term_a: str, term_b: str,
         for w in {term_a, term_b}
     }
     return _near_doc_ids(per_word, term_a, term_b, slop, ordered)
-
-
-def near_docs_indexed(
-    spark: SparkSession,
-    index_dir: str,
-    term_a: str,
-    term_b: str,
-    slop: int = 3,
-    ordered: bool = False,
-    n_buckets: int = 16,
-) -> DataFrame:
-    """Proximity (NEAR) match from position lists — doc_ids where
-    ``term_b`` occurs within ``slop`` tokens of ``term_a``; identical
-    output to query.bm25.near_docs over the same corpus."""
-    uniq = list(dict.fromkeys([term_a, term_b]))
-    buckets = sorted(set(_term_buckets(spark, uniq, n_buckets).values()))
-    rows = (
-        spark.read.parquet(f"{index_dir}/postings")
-        .where(F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-        .drop("bucket")
-    )
-    rows = with_scoring_group(spark, index_dir, rows)
-    deleted = read_deleted_ids(spark, index_dir)
-
-    def match_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        hits = _near_hits_segment(pdf, term_a, term_b, slop, ordered)
-        hits = hits[not_deleted_mask(deleted, hits)]
-        return pd.DataFrame({"doc_id": hits}).astype({"doc_id": "int64"})
-
-    matched = scorer_partitions(rows).groupBy("grp").applyInPandas(
-        match_segment, schema=T.StructType([T.StructField("doc_id", T.LongType())])
-    )
-    return _sorted_docs(matched)

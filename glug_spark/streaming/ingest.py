@@ -249,14 +249,11 @@ def _write_stats(spark: SparkSession, index_dir: str, stats: DataFrame,
 
 def _write_collection(spark: SparkSession, index_dir: str,
                       n_docs: int, total_tokens: int) -> dict:
-    from glug_spark.query import wand as _wand
-
     avgdl = total_tokens / n_docs if n_docs else 0.0
     spark.createDataFrame(
         [(int(n_docs), avgdl, int(total_tokens))],
         "n_docs long, avgdl double, total_tokens long",
     ).write.mode("overwrite").parquet(os.path.join(index_dir, "collection"))
-    _wand.invalidate_collection_cache(index_dir)
     return {"n_docs": n_docs, "avgdl": avgdl, "total_tokens": total_tokens}
 
 

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 import pytest
 
@@ -32,3 +33,19 @@ def duck():
         )
     yield con
     con.close()
+
+
+def open_searcher(spark, index_dir: str):
+    """A non-persisting Searcher on ``index_dir`` (use as
+    ``with open_searcher(spark, d) as s``); the bucket count comes from
+    the index's own params."""
+    from glug_spark.query.searcher import Searcher
+
+    return Searcher(spark, index_dir, persist=False)
+
+
+def index_rows(spark, index_dir: str, query: Callable) -> list:
+    """Collected rows of ``query(searcher)`` on a Searcher opened for
+    this one call, so the result reflects the index as it is now."""
+    with open_searcher(spark, index_dir) as s:
+        return query(s).collect()

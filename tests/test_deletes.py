@@ -34,10 +34,7 @@ from glug_spark.index.deletes import (
     read_deleted_ids,
 )
 from glug_spark.index.pipeline import build_index, read_docmap
-from glug_spark.query import wand
-from glug_spark.query.execute import search_indexed
-from glug_spark.query.searcher import Searcher
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, index_rows, open_searcher
 
 TERM_QUERIES = [
     (["data"], False),
@@ -62,6 +59,17 @@ def _rerank(rows, deleted: set[int], k: int) -> list[tuple]:
     return [(i + 1, r["doc_id"], r["score"]) for i, r in enumerate(kept)]
 
 
+def _topk(spark, idx: str, terms: list[str], k: int,
+          conj: bool = False) -> list[tuple]:
+    return [tuple(r) for r in index_rows(
+        spark, idx, lambda s: s.topk(terms, k=k, conjunctive=conj))]
+
+
+def _search(spark, idx: str, q: str, k: int) -> list[tuple]:
+    return [tuple(r) for r in index_rows(
+        spark, idx, lambda s: s.search(q, k=k))]
+
+
 @pytest.fixture(scope="module")
 def mor(spark):
     """Tombstoned index + pristine big-k baselines captured first."""
@@ -70,31 +78,21 @@ def mor(spark):
     _build(spark, SF_DIR, idx)
 
     # delete docs that OCCUPY the current top ranks (θ-shadowing bait)
-    top = wand.wand_topk(spark, idx, ["data"], k=10, n_buckets=8).collect()
-    deleted = sorted({r["doc_id"] for r in top[:5]} | {3, 7, 450})
-    kbig = 10 + len(deleted)
+    with open_searcher(spark, idx) as s:
+        top = s.topk(["data"], k=10).collect()
+        deleted = sorted({r["doc_id"] for r in top[:5]} | {3, 7, 450})
+        kbig = 10 + len(deleted)
 
-    base_rows: dict[str, list] = {}
-    for terms, conj in TERM_QUERIES:
-        base_rows[f"t:{' '.join(terms)}:{conj}"] = wand.wand_topk(
-            spark, idx, terms, k=kbig, conjunctive=conj, n_buckets=8
-        ).collect()
-    for q in COMPOSED:
-        base_rows[f"c:{q}"] = search_indexed(
-            spark, idx, q, k=kbig, n_buckets=8
-        ).collect()
-    base_rows["g:dat*"] = wand.glob_topk(
-        spark, idx, "dat*", k=kbig, n_buckets=8
-    ).collect()
-    base_rows["phrase"] = wand.phrase_docs_indexed(
-        spark, idx, ["table", "scan"], n_buckets=8
-    ).collect()
-    base_rows["near"] = wand.near_docs_indexed(
-        spark, idx, "table", "merge", slop=3, n_buckets=8
-    ).collect()
-    base_rows["any"] = wand.docs_with_any(
-        spark, idx, ["data", "dup"], n_buckets=8
-    ).collect()
+        base_rows: dict[str, list] = {}
+        for terms, conj in TERM_QUERIES:
+            base_rows[f"t:{' '.join(terms)}:{conj}"] = s.topk(
+                terms, k=kbig, conjunctive=conj
+            ).collect()
+        for q in COMPOSED:
+            base_rows[f"c:{q}"] = s.search(q, k=kbig).collect()
+        base_rows["g:dat*"] = s.glob_topk("dat*", k=kbig).collect()
+        base_rows["phrase"] = s.phrase_docs(["table", "scan"]).collect()
+        base_rows["near"] = s.near_docs("table", "merge", slop=3).collect()
 
     s = delete_docs(spark, idx, deleted + [999_999])  # unknown id: harmless
     assert s["tombstoned"] == len(deleted) + 1
@@ -106,9 +104,7 @@ def mor(spark):
 
 @pytest.mark.parametrize("terms,conj", TERM_QUERIES)
 def test_mor_topk_excludes_without_shadowing(spark, mor, terms, conj):
-    got = [tuple(r) for r in wand.wand_topk(
-        spark, mor["idx"], terms, k=10, conjunctive=conj, n_buckets=8
-    ).collect()]
+    got = _topk(spark, mor["idx"], terms, 10, conj)
     expected = _rerank(
         mor["base"][f"t:{' '.join(terms)}:{conj}"], mor["deleted"], 10
     )
@@ -117,56 +113,53 @@ def test_mor_topk_excludes_without_shadowing(spark, mor, terms, conj):
 
 @pytest.mark.parametrize("q", COMPOSED)
 def test_mor_composed(spark, mor, q):
-    got = [tuple(r) for r in search_indexed(
-        spark, mor["idx"], q, k=10, n_buckets=8
-    ).collect()]
+    got = _search(spark, mor["idx"], q, 10)
     assert got == _rerank(mor["base"][f"c:{q}"], mor["deleted"], 10)
 
 
 def test_mor_glob(spark, mor):
-    got = [tuple(r) for r in wand.glob_topk(
-        spark, mor["idx"], "dat*", k=10, n_buckets=8
-    ).collect()]
+    got = [tuple(r) for r in index_rows(
+        spark, mor["idx"], lambda s: s.glob_topk("dat*", k=10))]
     assert got == _rerank(mor["base"]["g:dat*"], mor["deleted"], 10)
 
 
 def test_mor_positional_and_membership(spark, mor):
-    for key, df in [
-        ("phrase", wand.phrase_docs_indexed(
-            spark, mor["idx"], ["table", "scan"], n_buckets=8)),
-        ("near", wand.near_docs_indexed(
-            spark, mor["idx"], "table", "merge", slop=3, n_buckets=8)),
-        ("any", wand.docs_with_any(
-            spark, mor["idx"], ["data", "dup"], n_buckets=8)),
-    ]:
-        got = sorted(r["doc_id"] for r in df.collect())
-        expected = sorted(
-            r["doc_id"] for r in mor["base"][key]
-            if r["doc_id"] not in mor["deleted"]
-        )
-        assert got == expected, key
+    with open_searcher(spark, mor["idx"]) as s:
+        for key, df in [
+            ("phrase", s.phrase_docs(["table", "scan"])),
+            ("near", s.near_docs("table", "merge", slop=3)),
+        ]:
+            got = sorted(r["doc_id"] for r in df.collect())
+            expected = sorted(
+                r["doc_id"] for r in mor["base"][key]
+                if r["doc_id"] not in mor["deleted"]
+            )
+            assert got == expected, key
 
 
 def test_mor_searcher_paths(spark, mor):
-    """Searcher pins the tombstone set at open; every method matches
-    the (delete-aware) module path and never surfaces a deleted doc."""
-    idx, deleted = mor["idx"], mor["deleted"]
-    with Searcher(spark, idx, n_buckets=8, persist=False) as s:
+    """One Searcher pins the tombstone set at open; every method —
+    batched slices included — equals the pre-delete baseline with the
+    deleted docs removed, and never surfaces a deleted doc."""
+    deleted, base = mor["deleted"], mor["base"]
+    with open_searcher(spark, mor["idx"]) as s:
         for terms, conj in TERM_QUERIES:
-            assert (
-                [tuple(r) for r in s.topk(terms, k=10, conjunctive=conj)
-                 .collect()]
-                == [tuple(r) for r in wand.wand_topk(
-                    spark, idx, terms, k=10, conjunctive=conj, n_buckets=8
-                ).collect()]
+            got = [tuple(r) for r in s.topk(terms, k=10, conjunctive=conj)
+                   .collect()]
+            assert got == _rerank(
+                base[f"t:{' '.join(terms)}:{conj}"], deleted, 10
             )
         for q in COMPOSED:
             got = [tuple(r) for r in s.search(q, k=10).collect()]
-            assert got == [tuple(r) for r in search_indexed(
-                spark, idx, q, k=10, n_buckets=8).collect()]
+            assert got == _rerank(base[f"c:{q}"], deleted, 10)
             assert not {d for _, d, _ in got} & deleted
         many = s.topk_many({"a": ["data"], "b": ["the", "dup"]}, k=10)
-        assert not {r["doc_id"] for r in many.collect()} & deleted
+        slices: dict[str, list] = {}
+        for r in many.orderBy("query_id", "rank").collect():
+            slices.setdefault(r["query_id"], []).append(
+                (r["rank"], r["doc_id"], r["score"]))
+        assert slices["a"] == _rerank(base["t:data:False"], deleted, 10)
+        assert slices["b"] == _rerank(base["t:the dup:False"], deleted, 10)
         manyc = s.search_many({"a": "data join", "b": "dat* -noise"}, k=10)
         assert not {r["doc_id"] for r in manyc.collect()} & deleted
         assert not {r["doc_id"]
@@ -200,7 +193,7 @@ def purged(spark):
     _build(spark, SF_DIR, idx_a)
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    top = wand.wand_topk(spark, idx_a, ["data"], k=10, n_buckets=8).collect()
+    top = index_rows(spark, idx_a, lambda s: s.topk(["data"], k=10))
     deleted = sorted({r["doc_id"] for r in top[:5]} | {3, 7, 450})
 
     os.makedirs(src_b)
@@ -245,21 +238,15 @@ def test_purge_stats_match_fresh_build(spark, purged):
 
 @pytest.mark.parametrize("terms,conj", TERM_QUERIES)
 def test_purge_topk_matches_fresh_build(spark, purged, terms, conj):
-    a = [tuple(r) for r in wand.wand_topk(
-        spark, purged["a"], terms, k=10, conjunctive=conj, n_buckets=8
-    ).collect()]
-    b = [tuple(r) for r in wand.wand_topk(
-        spark, purged["b"], terms, k=10, conjunctive=conj, n_buckets=8
-    ).collect()]
+    a = _topk(spark, purged["a"], terms, 10, conj)
+    b = _topk(spark, purged["b"], terms, 10, conj)
     assert a == b
 
 
 @pytest.mark.parametrize("q", COMPOSED)
 def test_purge_composed_matches_fresh_build(spark, purged, q):
-    a = [tuple(r) for r in search_indexed(
-        spark, purged["a"], q, k=10, n_buckets=8).collect()]
-    b = [tuple(r) for r in search_indexed(
-        spark, purged["b"], q, k=10, n_buckets=8).collect()]
+    a = _search(spark, purged["a"], q, 10)
+    b = _search(spark, purged["b"], q, 10)
     assert a == b
 
 
@@ -333,12 +320,8 @@ def test_ingest_after_purge_stats_exact(spark, tmp_path):
                .select("term", "df", "idf").collect())
     assert a == b
     for terms, conj in TERM_QUERIES:
-        qa = [tuple(r) for r in wand.wand_topk(
-            spark, idx, terms, k=10, conjunctive=conj, n_buckets=8
-        ).collect()]
-        qb = [tuple(r) for r in wand.wand_topk(
-            spark, ref_idx, terms, k=10, conjunctive=conj, n_buckets=8
-        ).collect()]
+        qa = _topk(spark, idx, terms, 10, conj)
+        qb = _topk(spark, ref_idx, terms, 10, conj)
         assert qa == qb, terms
 
 
@@ -406,17 +389,14 @@ def test_purge_random_differential(spark, tmp_path, seed):
     assert (ca["n_docs"], ca["total_tokens"]) == (cb["n_docs"],
                                                   cb["total_tokens"])
     for terms, conj in TERM_QUERIES:
-        qa = [tuple(r) for r in wand.wand_topk(
-            spark, idx, terms, k=20, conjunctive=conj, n_buckets=8
-        ).collect()]
-        qb = [tuple(r) for r in wand.wand_topk(
-            spark, ref_idx, terms, k=20, conjunctive=conj, n_buckets=8
-        ).collect()]
+        qa = _topk(spark, idx, terms, 20, conj)
+        qb = _topk(spark, ref_idx, terms, 20, conj)
         assert qa == qb, (seed, terms)
-    pa = sorted(r["doc_id"] for r in wand.phrase_docs_indexed(
-        spark, idx, ["table", "scan"], n_buckets=8).collect())
-    pb = sorted(r["doc_id"] for r in wand.phrase_docs_indexed(
-        spark, ref_idx, ["table", "scan"], n_buckets=8).collect())
+    pa, pb = (
+        sorted(r["doc_id"] for r in index_rows(
+            spark, d, lambda s: s.phrase_docs(["table", "scan"])))
+        for d in (idx, ref_idx)
+    )
     assert pa == pb
 
 
@@ -428,15 +408,13 @@ def test_deletes_survive_compaction(spark, tmp_path):
 
     idx = str(tmp_path / "index")
     _build(spark, SF_DIR, idx)
-    base = wand.wand_topk(spark, idx, ["data"], k=30, n_buckets=8).collect()
+    base = index_rows(spark, idx, lambda s: s.topk(["data"], k=30))
     deleted = sorted({r["doc_id"] for r in base[:6]})
 
     delete_docs(spark, idx, deleted)
-    before = [tuple(r) for r in wand.wand_topk(
-        spark, idx, ["data"], k=10, n_buckets=8).collect()]
+    before = _topk(spark, idx, ["data"], 10)
     compact_index(spark, idx, min_run=8, merge_factor=4, min_groups=1)
-    after = [tuple(r) for r in wand.wand_topk(
-        spark, idx, ["data"], k=10, n_buckets=8).collect()]
+    after = _topk(spark, idx, ["data"], 10)
     assert before == after
     assert not {d for _, d, _ in after} & set(deleted)
 
@@ -446,8 +424,7 @@ def test_deletes_survive_compaction(spark, tmp_path):
     n = spark.read.parquet(f"{idx}/collection").collect()[0]["n_docs"]
     total = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
     assert n == total - len(deleted)
-    final = [tuple(r) for r in wand.wand_topk(
-        spark, idx, ["data"], k=10, n_buckets=8).collect()]
+    final = _topk(spark, idx, ["data"], 10)
     assert not {d for _, d, _ in final} & set(deleted)
 
 

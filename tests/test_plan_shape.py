@@ -14,7 +14,6 @@ import tempfile
 import pytest
 
 from glug_spark.index.pipeline import build_index
-from glug_spark.query import wand
 from glug_spark.query.searcher import Searcher
 from tests.conftest import SF_DIR
 
@@ -56,9 +55,8 @@ def test_explicit_topk_plan(spark, plan_index):
 
 
 def test_glob_plan_distributed_expansion(spark, plan_index):
-    plan = _formatted(
-        wand.glob_topk(spark, plan_index, "dat*", k=10, n_buckets=8)
-    )
+    with Searcher(spark, plan_index, n_buckets=8, persist=False) as s:
+        plan = _formatted(s.glob_topk("dat*", k=10))
     # literal prefix reaches the scan as a pushable StartsWith
     assert "StringStartsWith(term,dat)" in plan, plan
     # matched vocabulary is broadcast-joined (never collected: no
@@ -79,6 +77,54 @@ def test_search_many_scan_pruned(spark, plan_index):
         plan2 = _formatted(s.search_many({"a": "data", "b": "join -merge"}, k=5))
     assert re.search(r"PartitionFilters: \[.*bucket.* IN \(", plan2), plan2
     assert "In(term," in plan2
+
+
+#: Spark jobs of one warm call + ``collect()`` per Searcher method on
+#: ``plan_index`` (4 cores, ``shuffle_partitions=8``). A change in a
+#: count is a change in the query's physical shape.
+WARM_JOBS = {
+    "topk_or": 3,
+    "topk_and": 3,
+    "glob_topk": 3,
+    "phrase_docs": 3,
+    "near_docs": 3,
+    "search": 3,
+    "topk_many": 5,
+    "search_many": 4,
+}
+
+
+def test_warm_job_counts(spark, plan_index):
+    """Each method's second call runs in its own job group, so the
+    status tracker counts exactly the jobs one warm query costs."""
+    sc = spark.sparkContext
+    with Searcher(spark, plan_index, n_buckets=8, persist=False) as s:
+        calls = {
+            "topk_or": lambda: s.topk(["data", "join"], k=10),
+            "topk_and": lambda: s.topk(["data", "join"], k=10,
+                                       conjunctive=True),
+            "glob_topk": lambda: s.glob_topk("dat*", k=10),
+            "phrase_docs": lambda: s.phrase_docs(["table", "scan"]),
+            "near_docs": lambda: s.near_docs("table", "merge", slop=3),
+            "search": lambda: s.search('dat* -noise "table scan"', k=10),
+            "topk_many": lambda: s.topk_many(
+                {"a": ["data"], "b": ["join", "dup"]}, k=5
+            ),
+            "search_many": lambda: s.search_many(
+                {"a": "data -join", "b": 'dat* "table scan"'}, k=5
+            ),
+        }
+        jobs = {}
+        for name, call in calls.items():
+            call().collect()
+            group = f"warm_jobs_{name}"
+            sc.setJobGroup(group, name)
+            try:
+                call().collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == WARM_JOBS
 
 
 def test_ivf_assignment_shuffle_free(spark):

@@ -14,7 +14,7 @@ from glug_spark.query.parser import parse_query
 from glug_spark.query.execute import search
 from glug_spark.semantics.glob import to_regex
 from glug_spark.semantics.tokenize import tokenize
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, index_rows
 
 K1, B = 1.2, 0.75
 
@@ -209,12 +209,11 @@ def search_index(spark):
 
 @pytest.mark.parametrize("query", QUERIES)
 def test_search_indexed_matches_full_scan(spark, search_index, query):
-    from glug_spark.query.execute import search_indexed
-
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     expected = [tuple(r) for r in search(docs, query, k=10).collect()]
     actual = [
         tuple(r)
-        for r in search_indexed(spark, search_index, query, k=10, n_buckets=8).collect()
+        for r in index_rows(spark, search_index, lambda s: s.search(
+            query, k=10))
     ]
     assert actual == expected, query

@@ -1,6 +1,6 @@
-"""Searcher (query-many handle) must be rank-identical to the
-module-level paths and to the full-scan scorer, including on a
-compacted index and for composed queries."""
+"""Searcher (the index query planner) must be rank-identical to the
+full-scan scorer, including on a compacted index and for composed
+queries."""
 
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ from glug_spark.index.pipeline import build_index
 from glug_spark.query import bm25
 from glug_spark.query.execute import search
 from glug_spark.query.searcher import Searcher
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, index_rows
 
 
 @pytest.fixture(scope="module")
@@ -310,13 +310,55 @@ def test_unicode_corpus_end_to_end(spark, tmp_path):
     index = str(tmp_path / "x")
     build_index(spark, corpus_dir, index, n_buckets=4)
     stored = spark.read.parquet(f"{corpus_dir}/documents.parquet")
-    from glug_spark.query import wand
     for terms, k, conj in [(["λέξη"], 10, False),
                            (["мова", "текст"], 10, True),
                            (["한국어", "Ελληνική", "text"], 20, False)]:
         want = [tuple(r) for r in
                 bm25.bm25_topk(stored, terms, k=k, conjunctive=conj).collect()]
         got = [tuple(r) for r in
-               wand.wand_topk(spark, index, terms, k=k, conjunctive=conj,
-                              n_buckets=4).collect()]
+               index_rows(spark, index, lambda s: s.topk(
+                   terms, k=k, conjunctive=conj))]
         assert got == want, terms
+
+
+def test_n_buckets_omitted_serves_build_value(spark, searcher):
+    """The term-bucket count comes from the index's params/: a Searcher
+    opened without it serves the same rows as one given the build's 8."""
+    calls = [
+        lambda s: s.topk(["data", "join"], k=10),
+        lambda s: s.topk(["data", "join"], k=10, conjunctive=True),
+        lambda s: s.search('dat* -noise "table scan"', k=10),
+        lambda s: s.phrase_docs(["table", "scan"]),
+        lambda s: s.topk_many({"a": ["data"], "b": ["the", "dup"]}, k=5)
+        .orderBy("query_id", "rank"),
+    ]
+    with Searcher(spark, searcher.index_dir, persist=False) as s:
+        assert s.n_buckets == searcher.n_buckets == 8
+        for call in calls:
+            got = call(s).collect()
+            assert got and got == call(searcher).collect()
+
+
+def test_n_buckets_mismatch_raises(spark, tmp_path):
+    """A bucket count that differs from the build's would prune every
+    scan to the wrong bucket partitions — an empty top-k with no error.
+    The Searcher refuses it, and so do the CLI query commands."""
+    import os
+    import subprocess
+    import sys
+
+    d = str(tmp_path / "b16")
+    build_index(spark, SF_DIR, d, n_buckets=16)
+    with pytest.raises(ValueError, match="built with n_buckets=16, not 8"):
+        Searcher(spark, d, n_buckets=8, persist=False)
+    with Searcher(spark, d, n_buckets=16, persist=False) as s:
+        assert s.topk(["data"], k=5).collect()
+
+    out = subprocess.run(
+        [sys.executable, "-m", "glug_spark.cli", "query", "data",
+         "--index", d, "--buckets", "8"],
+        capture_output=True, text=True, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert out.returncode == 2, out.stderr[-2000:]
+    assert "built with n_buckets=16, not 8" in out.stderr

@@ -12,9 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from glug_spark.index.pipeline import build_index
-from glug_spark.query import bm25, wand
+from glug_spark.query import bm25
 from glug_spark.streaming.ingest import ingest_available, refresh_stats
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, index_rows, open_searcher
 
 QUERIES = [
     (["data"], 10, False),
@@ -64,8 +64,8 @@ def test_ingested_rank_identical(spark, ingested, terms, k, conjunctive):
     ]
     actual = [
         tuple(r)
-        for r in wand.wand_topk(spark, index, terms, k=k,
-                                conjunctive=conjunctive, n_buckets=8).collect()
+        for r in index_rows(spark, index, lambda s: s.topk(
+            terms, k=k, conjunctive=conjunctive))
     ]
     assert actual == expected
 
@@ -87,8 +87,8 @@ def test_ingested_phrase_identical(spark, ingested):
     expected = [r["doc_id"] for r in bm25.phrase_docs(docs, ["table", "scan"]).collect()]
     actual = [
         r["doc_id"]
-        for r in wand.phrase_docs_indexed(spark, index, ["table", "scan"],
-                                          n_buckets=8).collect()
+        for r in index_rows(spark, index, lambda s: s.phrase_docs(
+            ["table", "scan"]))
     ]
     assert actual == expected
 
@@ -180,13 +180,13 @@ def test_crash_between_append_and_manifest_is_adopted(spark, tmp_path):
     assert s["n_docs"] == docs.count()
     # adopted, not re-appended
     assert spark.read.parquet(f"{index}/postings").count() == rows_after_crash
-    for terms, k, conj in QUERIES:
-        want = [tuple(r) for r in
-                bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
-        got = [tuple(r) for r in
-               wand.wand_topk(spark, index, terms, k=k, conjunctive=conj,
-                              n_buckets=8).collect()]
-        assert got == want, terms
+    with open_searcher(spark, index) as s:
+        for terms, k, conj in QUERIES:
+            want = [tuple(r) for r in
+                    bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
+            got = [tuple(r) for r in
+                   s.topk(terms, k=k, conjunctive=conj).collect()]
+            assert got == want, terms
 
 
 def test_partial_append_fails_loudly(spark, tmp_path):
@@ -258,13 +258,13 @@ def test_out_of_order_disjoint_batches_accepted(spark, tmp_path):
     )
     s = ingest_available(spark, arrivals, index, n_buckets=8)
     assert s["n_docs"] == docs.count()
-    for terms, k, conj in QUERIES:
-        want = [tuple(r) for r in
-                bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
-        got = [tuple(r) for r in
-               wand.wand_topk(spark, index, terms, k=k, conjunctive=conj,
-                              n_buckets=8).collect()]
-        assert got == want, terms
+    with open_searcher(spark, index) as s:
+        for terms, k, conj in QUERIES:
+            want = [tuple(r) for r in
+                    bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
+            got = [tuple(r) for r in
+                   s.topk(terms, k=k, conjunctive=conj).collect()]
+            assert got == want, terms
 
 
 def test_compact_refuses_unrecovered_stream_namespace(spark, tmp_path):
@@ -296,13 +296,13 @@ def test_compact_refuses_unrecovered_stream_namespace(spark, tmp_path):
     # recovery (the drain adopts the orphan), then compaction is legal
     ingest_available(spark, arrivals, index, n_buckets=8)
     compact_index(spark, index, min_run=1000, merge_factor=1000, min_groups=1)
-    for terms, k, conj in QUERIES:
-        want = [tuple(r) for r in
-                bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
-        got = [tuple(r) for r in
-               wand.wand_topk(spark, index, terms, k=k, conjunctive=conj,
-                              n_buckets=8).collect()]
-        assert got == want, terms
+    with open_searcher(spark, index) as s:
+        for terms, k, conj in QUERIES:
+            want = [tuple(r) for r in
+                    bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
+            got = [tuple(r) for r in
+                   s.topk(terms, k=k, conjunctive=conj).collect()]
+            assert got == want, terms
 
 
 def test_compact_folds_committed_but_unfolded_batch(spark, tmp_path):
@@ -341,13 +341,13 @@ def test_compact_folds_committed_but_unfolded_batch(spark, tmp_path):
     coll = spark.read.parquet(f"{index}/collection").collect()[0]
     assert coll["n_docs"] == docs.count()
     assert coll["total_tokens"] == enc.agg(F.sum("cf_local")).collect()[0][0]
-    for terms, k, conj in QUERIES:
-        want = [tuple(r) for r in
-                bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
-        got = [tuple(r) for r in
-               wand.wand_topk(spark, index, terms, k=k, conjunctive=conj,
-                              n_buckets=8).collect()]
-        assert got == want, terms
+    with open_searcher(spark, index) as s:
+        for terms, k, conj in QUERIES:
+            want = [tuple(r) for r in
+                    bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
+            got = [tuple(r) for r in
+                   s.topk(terms, k=k, conjunctive=conj).collect()]
+            assert got == want, terms
 
 
 def test_auto_compact_policy(spark, tmp_path):
@@ -392,13 +392,13 @@ def test_auto_compact_policy(spark, tmp_path):
     # shrink too — fragmented runs are rewritten under their grp id)
     assert fragmentation(spark, index)["n_groups"] <= 4
 
-    for terms, k, conj in QUERIES:
-        want = [tuple(r) for r in
-                bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
-        got = [tuple(r) for r in
-               wand.wand_topk(spark, index, terms, k=k, conjunctive=conj,
-                              n_buckets=8).collect()]
-        assert got == want, terms
+    with open_searcher(spark, index) as s:
+        for terms, k, conj in QUERIES:
+            want = [tuple(r) for r in
+                    bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
+            got = [tuple(r) for r in
+                   s.topk(terms, k=k, conjunctive=conj).collect()]
+            assert got == want, terms
 
 
 def test_happy_path_skips_namespace_probe(spark, tmp_path, monkeypatch):
@@ -461,13 +461,13 @@ def test_compact_ingest_compact_interplay(spark, tmp_path):
         spark.conf.set(key, prev)
 
     def check(tag):
-        for terms, k, conj in QUERIES:
-            want = [tuple(r) for r in
-                    bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
-            got = [tuple(r) for r in
-                   wand.wand_topk(spark, index, terms, k=k, conjunctive=conj,
-                                  n_buckets=8).collect()]
-            assert got == want, (tag, terms)
+        with open_searcher(spark, index) as s:
+            for terms, k, conj in QUERIES:
+                want = [tuple(r) for r in bm25.bm25_topk(
+                    docs, terms, k=k, conjunctive=conj).collect()]
+                got = [tuple(r) for r in
+                       s.topk(terms, k=k, conjunctive=conj).collect()]
+                assert got == want, (tag, terms)
 
     check("after-ingest")
     summary = compact_index(spark, index, min_run=1000, merge_factor=1000,
@@ -484,9 +484,9 @@ def test_compact_ingest_compact_interplay(spark, tmp_path):
 
 
 def test_query_before_and_after_ingest_no_stale_cache(spark, tmp_path):
-    """A module-function query issued BEFORE ingest populates the
-    per-process collection cache; the post-ingest query must use the
-    REFRESHED n_docs/avgdl (regression: the cache used to go stale)."""
+    """A query issued BEFORE ingest must not leave stale collection
+    stats behind: the post-ingest query must score with the REFRESHED
+    n_docs/avgdl."""
     initial = str(tmp_path / "initial")
     arrivals = str(tmp_path / "arrivals")
     index = str(tmp_path / "index")
@@ -496,8 +496,8 @@ def test_query_before_and_after_ingest_no_stale_cache(spark, tmp_path):
         os.path.join(initial, "documents.parquet")
     )
     build_index(spark, initial, index, n_buckets=8)
-    # populate the collection cache with the 300-doc stats
-    wand.wand_topk(spark, index, ["data"], k=5, n_buckets=8).collect()
+    # query the 300-doc index first
+    index_rows(spark, index, lambda s: s.topk(["data"], k=5))
 
     docs.where(F.col("doc_id") >= 300).write.parquet(
         os.path.join(arrivals, "wave.parquet")
@@ -506,7 +506,7 @@ def test_query_before_and_after_ingest_no_stale_cache(spark, tmp_path):
 
     want = [tuple(r) for r in bm25.bm25_topk(docs, ["data"], k=10).collect()]
     got = [tuple(r) for r in
-           wand.wand_topk(spark, index, ["data"], k=10, n_buckets=8).collect()]
+           index_rows(spark, index, lambda s: s.topk(["data"], k=10))]
     assert got == want
 
 
